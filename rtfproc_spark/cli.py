@@ -14,7 +14,7 @@ from __future__ import annotations
 import argparse
 import sys
 
-from .kernel import ReplacementSet, RTFEngine, empty_replacements
+from .kernel import RTFEngine, compile_replacements
 
 
 def main(argv=None) -> int:
@@ -40,7 +40,7 @@ def main(argv=None) -> int:
         if not sep:
             ap.error(f"--replace needs KEY=VALUE, got {kv!r}")
         pairs.append((k, v))
-    rs = ReplacementSet(pairs) if pairs else empty_replacements()
+    rs = compile_replacements(pairs)
 
     data = (
         open(args.input, "rb").read() if args.input else sys.stdin.buffer.read()

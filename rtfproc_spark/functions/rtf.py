@@ -25,7 +25,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..kernel import ReplacementSet, RTFEngine, empty_replacements
+from ..kernel import ReplacementSet, RTFEngine, compile_replacements
 
 EXTRACT_SCHEMA = StructType(
     [
@@ -63,40 +63,47 @@ def _passthrough_mask(texts: pd.Series, rs: ReplacementSet) -> pd.Series:
     return ~texts.str.contains(pat, regex=True, na=True)
 
 
+def _split_run(texts: pd.Series, rs: ReplacementSet):
+    """The prefilter/engine split every kernel UDF shares.
+
+    Returns ``(filled, fast, slow_idx, runs)``: the re-indexed cells with
+    nulls as ``""``, the pass-through mask, the index of the non-null cells
+    the mask rejects, and one ``RTFEngine.run`` result per such cell, in
+    order. ``RTFEngine`` is resolved from this module's globals on every
+    call, so a substituted engine class sees every run."""
+    texts = texts.reset_index(drop=True)
+    filled = texts.fillna("")
+    fast = _passthrough_mask(filled, rs) & texts.notna()
+    slow_mask = (texts.notna() & ~fast).to_numpy()
+    runs = []
+    if slow_mask.any():
+        eng = RTFEngine(rs)  # one engine per batch, reset per row
+        runs = [eng.run(t.encode("utf-8")) for t in filled.to_numpy()[slow_mask]]
+    return filled, fast, texts.index[slow_mask], runs
+
+
 def make_extract_fn(pairs=None):
     """Returns a pandas Series->DataFrame function implementing rtf_extract."""
-    rs = ReplacementSet(pairs) if pairs else empty_replacements()
+    rs = compile_replacements(pairs)
 
     def extract(texts: pd.Series) -> pd.DataFrame:
-        texts = texts.reset_index(drop=True)
-        n = len(texts)
+        filled, fast, slow_idx, runs = _split_run(texts, rs)
+        n = len(filled)
         rtf_out = pd.Series([None] * n, dtype=object)
         plain = pd.Series([None] * n, dtype=object)
         error = pd.Series([None] * n, dtype=object)
         nbytes = pd.Series([0] * n, dtype="int64")
-        filled = texts.fillna("")
-        fast = _passthrough_mask(filled, rs) & texts.notna()
         if fast.any():
             ft = filled[fast]
             rtf_out[fast] = ft
             pt = ft.str.translate(_STR_TXT_TABLE)
             plain[fast] = pt
             nbytes[fast] = pt.str.len()  # pure-ASCII: chars == bytes
-        slow_mask = (texts.notna() & ~fast).to_numpy()
-        if slow_mask.any():
-            eng = RTFEngine(rs)  # one engine per batch, reset per row
-            outs, plains, errs, nb = [], [], [], []
-            for t in filled.to_numpy()[slow_mask]:
-                out_b, plain_b, err = eng.run(t.encode("utf-8"))
-                outs.append(out_b.decode("utf-8", errors="replace"))
-                plains.append(plain_b.decode("utf-8", errors="replace"))
-                errs.append(err)
-                nb.append(len(plain_b))
-            idx = texts.index[slow_mask]
-            rtf_out[idx] = outs
-            plain[idx] = plains
-            error[idx] = errs
-            nbytes[idx] = nb
+        if runs:
+            rtf_out[slow_idx] = [o.decode("utf-8", errors="replace") for o, _, _ in runs]
+            plain[slow_idx] = [p.decode("utf-8", errors="replace") for _, p, _ in runs]
+            error[slow_idx] = [e for _, _, e in runs]
+            nbytes[slow_idx] = [len(p) for _, p, _ in runs]
         return pd.DataFrame(
             {
                 "rtf_out": rtf_out,
@@ -109,53 +116,52 @@ def make_extract_fn(pairs=None):
     return extract
 
 
-def rtf_extract_cols(col, pairs=None) -> Column:
-    """df.select(rtf_extract_cols("text", pairs).alias("x")) -> struct column."""
-    fn = make_extract_fn(pairs)
-    udf = F.pandas_udf(fn, returnType=EXTRACT_SCHEMA)
-    return udf(col if isinstance(col, Column) else F.col(col))
-
-
 def _single_output_fn(pairs, which: str):
     """Series->Series kernel producing only one output column — half the
     Arrow transfer (and no struct assembly) when a pipeline needs just the
     stripped text or just the replaced RTF."""
-    rs = ReplacementSet(pairs) if pairs else empty_replacements()
+    rs = compile_replacements(pairs)
     want_plain = which == "plain_text"
 
     def one(texts: pd.Series) -> pd.Series:
-        texts = texts.reset_index(drop=True)
-        out = pd.Series([None] * len(texts), dtype=object)
-        filled = texts.fillna("")
-        fast = _passthrough_mask(filled, rs) & texts.notna()
+        filled, fast, slow_idx, runs = _split_run(texts, rs)
+        out = pd.Series([None] * len(filled), dtype=object)
         if fast.any():
             ft = filled[fast]
             out[fast] = ft.str.translate(_STR_TXT_TABLE) if want_plain else ft
-        slow_mask = (texts.notna() & ~fast).to_numpy()
-        if slow_mask.any():
-            eng = RTFEngine(rs)
-            vals = []
-            for t in filled.to_numpy()[slow_mask]:
-                rtf_b, plain_b, _ = eng.run(t.encode("utf-8"))
-                vals.append(
-                    (plain_b if want_plain else rtf_b).decode(
-                        "utf-8", errors="replace"
-                    )
-                )
-            out[texts.index[slow_mask]] = vals
+        if runs:
+            out[slow_idx] = [
+                (p if want_plain else o).decode("utf-8", errors="replace")
+                for o, p, _ in runs
+            ]
         return out
 
     return one
 
 
+def _col(col) -> Column:
+    return col if isinstance(col, Column) else F.col(col)
+
+
+def _extract_udf(pairs):
+    return F.pandas_udf(make_extract_fn(pairs), returnType=EXTRACT_SCHEMA)
+
+
+def _single_udf(pairs, which: str):
+    return F.pandas_udf(_single_output_fn(pairs, which), returnType=StringType())
+
+
+def rtf_extract_cols(col, pairs=None) -> Column:
+    """df.select(rtf_extract_cols("text", pairs).alias("x")) -> struct column."""
+    return _extract_udf(pairs)(_col(col))
+
+
 def rtf_strip_col(col) -> Column:
-    udf = F.pandas_udf(_single_output_fn(None, "plain_text"), returnType=StringType())
-    return udf(col if isinstance(col, Column) else F.col(col))
+    return _single_udf(None, "plain_text")(_col(col))
 
 
 def rtf_replace_col(col, pairs) -> Column:
-    udf = F.pandas_udf(_single_output_fn(pairs, "rtf_out"), returnType=StringType())
-    return udf(col if isinstance(col, Column) else F.col(col))
+    return _single_udf(pairs, "rtf_out")(_col(col))
 
 
 def with_rtf_extract(df, pairs=None, text_col: str = "text"):
@@ -180,15 +186,11 @@ def register_sql_functions(spark, pairs=None, prefix: str = "rtf_") -> list[str]
     for different replacement sets. Returns the registered names. The
     registered functions are the same Arrow-batched pandas UDFs as the
     column API — one Python island per projection, no per-row Python."""
-    strip_udf = F.pandas_udf(
-        _single_output_fn(None, "plain_text"), returnType=StringType()
-    )
-    replace_udf = F.pandas_udf(
-        _single_output_fn(pairs, "rtf_out"), returnType=StringType()
-    )
-    extract_udf = F.pandas_udf(make_extract_fn(pairs), returnType=EXTRACT_SCHEMA)
-    names = [f"{prefix}strip", f"{prefix}replace", f"{prefix}extract"]
-    spark.udf.register(names[0], strip_udf)
-    spark.udf.register(names[1], replace_udf)
-    spark.udf.register(names[2], extract_udf)
-    return names
+    udfs = {
+        f"{prefix}strip": _single_udf(None, "plain_text"),
+        f"{prefix}replace": _single_udf(pairs, "rtf_out"),
+        f"{prefix}extract": _extract_udf(pairs),
+    }
+    for name, udf in udfs.items():
+        spark.udf.register(name, udf)
+    return list(udfs)

@@ -6,7 +6,6 @@ from .engine import (  # noqa: F401
     ReplacementSet,
     RTFEngine,
     empty_replacements,
-    rtf_replace_bytes,
 )
 from .unicode import (  # noqa: F401
     cdpt_from_utf8,
@@ -15,4 +14,10 @@ from .unicode import (  # noqa: F401
     utf16_from_cdpt,
 )
 from .codepage import DBSQ, NONE, UNSP, cpgfromcharsetnum, cpgtou  # noqa: F401
-from .api import rtf_extract, rtf_replace, rtf_strip  # noqa: F401
+from .api import (  # noqa: F401
+    compile_replacements,
+    rtf_extract,
+    rtf_extract_bytes,
+    rtf_replace,
+    rtf_strip,
+)

@@ -1000,10 +1000,3 @@ def _span_text(rs: ReplacementSet, span: bytes) -> bytes:
     if pos < len(span):
         parts.append(span[pos:].translate(_TXT_TRANSLATE, _TXT_DELETE))
     return b"".join(parts)
-
-
-def rtf_replace_bytes(
-    data: bytes, replacements: ReplacementSet | None = None
-) -> tuple[bytes, bytes, str | None]:
-    """Process one RTF byte stream; returns (rtf_out, plain_text, error)."""
-    return RTFEngine(replacements).run(data)

@@ -429,19 +429,9 @@ def match_sequence(
     after_match: str = "skip_to_next",
     strict_steps: set[int] | None = None,
     contiguous: bool = False,
-    reuse_scan: bool = False,
 ) -> DataFrame:
     """Ordered-sequence detection: one output row per step-1 anchor whose
     full pattern completes, with (ts_k, id_k) for every step.
-
-    ``reuse_scan=True`` (round 8, opt-in) evaluates every step/loop/
-    forbid/count predicate once in a single scan, persists the narrow
-    (key, ts, id, captured payload, bitmask) frame, and runs the cascade
-    off bit tests against it — one source pass instead of one per
-    step/branch, at the cost of per-branch predicate pushdown and cache
-    residency. Release the cached frame with
-    ``functions.buckets.release_persisted()`` after consuming the result.
-    Results are identical either way (differentially pinned).
 
     ``strict_steps`` marks 1-based step positions as STRICTLY CONTIGUOUS
     (Flink's ``next()`` vs the default ``followedBy``; MATCH_RECOGNIZE's
@@ -583,7 +573,6 @@ def match_sequence(
             counts=_shift_counts_for_anchor_loop(counts),
             after_match=_remap_skip_for_anchor_loop(after_match, len(steps)),
             strict_steps={s + 1 if s >= 2 else s for s in strict} or None,
-            reuse_scan=reuse_scan,
         )
         return _anchor_loop_project(out, sp0.name, sp0.bind)
     if len(steps) < 2:
@@ -781,87 +770,6 @@ def match_sequence(
     # them up front so batch and stream treat contract-violating rows
     # identically (the stream twin dropna()s the same rows).
     df = df.filter(F.col(time_col).isNotNull() & F.col(id_col).isNotNull())
-    if reuse_scan:
-        # SHARED CANDIDATE BASE FRAME (round 8, opt-in): the cascade below
-        # re-scans the source once per step/branch — per-branch pruning
-        # and pushdown make each scan cheap, but at k steps that is k+
-        # passes over the events table. With reuse_scan=True every step
-        # predicate (plus loop bodies, the forbid predicate and the
-        # CountBetween predicates) is evaluated ONCE in a single scan
-        # projection as a long bitmask `_pm`, the narrow
-        # (key, ts, id, captured payload, _pm) frame is persisted via the
-        # process registry (release with
-        # functions.buckets.release_persisted), rows matching NO
-        # predicate are dropped (kept when strict steps need every row),
-        # and the original predicates are REWRITTEN to bit tests so the
-        # unchanged cascade reads the cached frame instead of the source.
-        # Trade-off: one full scan with no per-branch pushdown + cache
-        # residency, vs k pushed-down scans — wins when the pattern
-        # vocabulary covers a meaningful fraction of rows or the source
-        # scan is expensive; the default (False) keeps pushdown.
-        preds_flat: list[Column] = []
-
-        def _reg(p: Column) -> Column:
-            preds_flat.append(
-                F.coalesce(p.cast("boolean"), F.lit(False))
-            )
-            i = len(preds_flat) - 1
-            return (
-                F.shiftright(F.col("_pm"), i).bitwiseAND(F.lit(1)) == 1
-            )
-
-        new_steps: list = []
-        for s in steps:
-            if isinstance(s, LoopStep):
-                body = s.pred
-                nb = (
-                    _reg(body) if isinstance(body, Column)
-                    else [_reg(b) for b in body]
-                )
-                new_steps.append(_dc_replace(s, pred=nb))
-            elif isinstance(s, CrossPred):
-                new_steps.append(_dc_replace(
-                    s,
-                    local=_reg(s.local) if s.local is not None
-                    else _reg(F.lit(True)),
-                ))
-            elif _is_alt(s):
-                new_steps.append([_reg(b) for b in s])
-            else:
-                new_steps.append(_reg(s))
-        forbid = _reg(forbid) if forbid is not None else None
-        counts = [
-            _dc_replace(c, pred=_reg(c.pred)) for c in (counts or [])
-        ] or None
-        if len(preds_flat) > 62:
-            raise ValueError(
-                "reuse_scan supports at most 62 predicate branches "
-                "(long bitmask)"
-            )
-        payload_cols = sorted(
-            {c for cols in captures.values() for c in cols}
-            | {c for s in steps if isinstance(s, CrossPred)
-               for c in s.ev_cols}
-        )
-        mask = reduce(
-            lambda a, b: a.bitwiseOR(b),
-            [
-                F.when(p, F.lit(1 << i)).otherwise(F.lit(0)).cast("long")
-                for i, p in enumerate(preds_flat)
-            ],
-        )
-        base = df.select(
-            *key_cols, time_col, id_col, *payload_cols,
-            mask.alias("_pm"),
-        )
-        if not strict:
-            # strict contiguity joins against EVERY event of the key —
-            # only then must non-vocabulary rows stay in the frame
-            base = base.filter(F.col("_pm") != 0)
-        from ..functions.buckets import persist_tracked
-
-        df = persist_tracked(base)
-        steps = new_steps
     iv = F.expr(f"INTERVAL {within}")
     step_iv = F.expr(f"INTERVAL {step_within}") if step_within else None
 
@@ -1550,7 +1458,6 @@ def match_repeated_group(
     prefix: list[Column] | None = None,
     suffix: list[Column] | None = None,
     suffix_names: list[str] | None = None,
-    reuse_scan: bool = False,
 ) -> DataFrame:
     """MATCH_RECOGNIZE's quantified SEQUENCE group ``(A B){m,n}`` as a
     lone pattern — or, with ``closer``, ``(A B){m,n} C`` (round 8), or
@@ -1627,35 +1534,6 @@ def match_repeated_group(
     if len(snames) != len(suf):
         raise ValueError("suffix_names must name every suffix step")
     pre = list(prefix or ())
-    if reuse_scan:
-        # ONE shared bitmask scan for the WHOLE r-variant union — this
-        # is where the opt-in pays most: the default plan re-scans the
-        # source once per step per variant (n-m+1 variants x (p+rk+s)
-        # steps), the shared frame reduces that to a single projection
-        # feeding every variant's cascade (all variants test the same
-        # predicates, so one mask serves them all).
-        from ..functions.buckets import persist_tracked
-
-        allp = [*pre, *preds, *suf]
-        flat = [F.coalesce(p.cast("boolean"), F.lit(False)) for p in allp]
-        mask = reduce(
-            lambda a, b: a.bitwiseOR(b),
-            [F.when(p, F.lit(1 << i)).otherwise(F.lit(0)).cast("long")
-             for i, p in enumerate(flat)],
-        )
-        df = persist_tracked(
-            df.select(*key_cols, time_col, id_col, mask.alias("_pm"))
-            .filter(F.col("_pm") != 0)
-        )
-
-        def _bit(i):
-            return (
-                F.shiftright(F.col("_pm"), i).bitwiseAND(F.lit(1)) == 1
-            )
-
-        pre = [_bit(i) for i in range(np_)]
-        preds = [_bit(np_ + i) for i in range(k)]
-        suf = [_bit(np_ + k + i) for i in range(len(suf))]
     variants = []
     for r in range(min_r, max_r + 1):
         steps_r = [*pre, *(p for _ in range(r) for p in preds), *suf]
@@ -1723,7 +1601,6 @@ def match_permutation(
     within: str = "30 minutes",
     strict_steps: set[int] | None = None,
     contiguous: bool = False,
-    reuse_scan: bool = False,
 ) -> DataFrame:
     """MATCH_RECOGNIZE's ``PERMUTE(A, B, C)``: the steps may match in ANY
     order — the pattern is the alternation of every ordering, and (per
@@ -1762,29 +1639,6 @@ def match_permutation(
         )
     if not all(isinstance(p, Column) for p in preds):
         raise ValueError("PERMUTE steps must be plain Column predicates")
-    if reuse_scan:
-        # one shared bitmask scan for the k! ordering union (the same
-        # k predicates are tested in every ordering — see
-        # match_repeated_group for the trade-off discussion)
-        from ..functions.buckets import persist_tracked
-
-        flat = [F.coalesce(p.cast("boolean"), F.lit(False)) for p in preds]
-        mask = reduce(
-            lambda a, b: a.bitwiseOR(b),
-            [F.when(p, F.lit(1 << i)).otherwise(F.lit(0)).cast("long")
-             for i, p in enumerate(flat)],
-        )
-        keep_all = bool(strict_steps) or contiguous
-        base = df.select(*key_cols, time_col, id_col, mask.alias("_pm"))
-        if not keep_all:
-            # strict/contiguous orderings test EVERY event of the key —
-            # only then must non-vocabulary rows stay in the frame
-            base = base.filter(F.col("_pm") != 0)
-        df = persist_tracked(base)
-        preds = [
-            F.shiftright(F.col("_pm"), i).bitwiseAND(F.lit(1)) == 1
-            for i in range(k)
-        ]
     outs = []
     for pi, perm in enumerate(permutations(range(k))):
         m = match_sequence(

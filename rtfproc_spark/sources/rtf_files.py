@@ -37,7 +37,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..kernel import ReplacementSet, RTFEngine, empty_replacements
+from ..kernel import RTFEngine, compile_replacements
 
 BINARY_EXTRACT_SCHEMA = StructType(
     [
@@ -53,7 +53,7 @@ def rtf_extract_binary_cols(col, pairs=None):
     """Bytes-domain extraction UDF: binary content in, (rtf_out bytes,
     plain_text bytes, error, n_text_bytes) out — no str decode anywhere,
     so outputs are byte-identical to the reference CLI on the same file."""
-    rs = ReplacementSet(pairs) if pairs else empty_replacements()
+    rs = compile_replacements(pairs)
 
     @F.pandas_udf(BINARY_EXTRACT_SCHEMA)
     def extract(contents: pd.Series) -> pd.DataFrame:

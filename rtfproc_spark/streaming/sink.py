@@ -5,15 +5,11 @@ The reference writes raw bytes to fout only once they are provably final
 that commits each micro-batch idempotently so replays after a crash cannot
 duplicate rows.
 
-Local implementation (no Iceberg/Kafka jars in this sandbox): one parquet
+Implementation (plain parquet, no table-format jars): one parquet
 subdirectory per epoch batch, written to a temp path then atomically renamed
 to ``batch_id=N``. A replayed batch N overwrites the same directory —
 idempotent by construction. Readers merge by key taking the newest batch
 (``read_sink``), i.e. MERGE-by-key semantics materialized at read time.
-
-Cluster path: swap ``_publish_batch`` for an Iceberg ``MERGE INTO`` keyed on
-(conv_id, turn_idx) — the foreachBatch wiring and checkpointing are
-identical (kept behind the ``table_format`` switch).
 """
 
 from __future__ import annotations
@@ -45,27 +41,12 @@ def _hashable(dt) -> bool:
 class IdempotentSink:
     path: str
     keys: list[str] = field(default_factory=lambda: ["conv_id", "turn_idx"])
-    table_format: str = "parquet-batchdirs"  # or "iceberg" on a real cluster
     metrics: list = field(default_factory=list)
-    # Write-side within-batch key dedup is OFF by default: it costs a FULL
-    # SHUFFLE of the batch payload (rtf_out + plain_text — the widest
-    # columns in the pipeline) on every micro-batch, and key uniqueness is
-    # already enforced where the merge happens — read_sink's newest-batch-
-    # wins row_number keeps exactly one row per key, and the Iceberg MERGE
-    # path dedups its source unconditionally (MERGE INTO errors on
-    # duplicate source keys). Turn on only for an at-least-once source
-    # whose in-batch duplicates you want gone from the raw batch dirs too.
-    dedupe_in_batch: bool = False
 
     def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self.table_format == "iceberg":
-            self._publish_iceberg(batch_df, batch_id)
-            return
         t0 = time.monotonic()
         final_dir = os.path.join(self.path, f"batch_id={batch_id}")
         tmp_dir = os.path.join(self.path, f"_tmp_batch_{batch_id}")
-        if self.dedupe_in_batch:
-            batch_df = batch_df.dropDuplicates(self.keys)
         batch_df.write.mode("overwrite").parquet(tmp_dir)
         if os.path.exists(final_dir):
             shutil.rmtree(final_dir)  # replayed batch: overwrite, idempotent
@@ -79,23 +60,6 @@ class IdempotentSink:
         self.metrics.append(m)
         with open(os.path.join(self.path, "_metrics.jsonl"), "a") as f:
             f.write(json.dumps(m) + "\n")
-
-    def _publish_iceberg(self, batch_df: DataFrame, batch_id: int) -> None:
-        """Cluster path: key-idempotent MERGE INTO an Iceberg table
-        (self.path is the table identifier). Requires the Iceberg runtime
-        jar + catalog conf; the local sandbox has neither, so this branch is
-        exercised only on a real cluster — the foreachBatch wiring,
-        checkpointing, and replay semantics are identical to the local path.
-        """
-        deduped = batch_df.dropDuplicates(self.keys)
-        view = f"_updates_{batch_id}"
-        deduped.createOrReplaceTempView(view)
-        on = " AND ".join(f"t.{k} = s.{k}" for k in self.keys)
-        deduped.sparkSession.sql(
-            f"MERGE INTO {self.path} t USING {view} s ON {on} "
-            "WHEN MATCHED THEN UPDATE SET * "
-            "WHEN NOT MATCHED THEN INSERT *"
-        )
 
     def writer(self):
         return self.foreach_batch
@@ -115,8 +79,9 @@ def _count_parquet_rows(d: str) -> int:
 def read_sink(spark, path: str, keys: list[str] | None = None) -> DataFrame:
     """Merged view of the sink: newest batch wins per key.
 
-    With ``dedupe_in_batch=False`` (the write-side default) a single batch
-    directory may hold several rows per key, so the merge window tiebreaks
+    The sink writes each batch as it arrives, without a key-dedup shuffle
+    of the wide payload columns, so a single batch directory may hold
+    several rows per key (at-least-once sources); the merge window tiebreaks
     WITHIN a batch by a hash of the payload columns — deterministic for any
     input (and a no-op when same-batch duplicates are byte-identical, the
     common at-least-once-source case). ``_metrics`` row counts remain raw

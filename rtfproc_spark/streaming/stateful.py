@@ -120,97 +120,6 @@ def conversation_tracker(
     )
 
 
-TRACKER_TWS_STATE_DDL = "turns_seen long, last_ts_epoch double, last_role string"
-
-
-def _make_tracker_processor():
-    """B12 on the newer transformWithStateInPandas API (SURVEY §2 B12 names
-    it first): same semantics as _track, state in a ValueState handle backed
-    by the RocksDB state-store provider. Timestamps are carried as epoch
-    seconds in state (tz-independent)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class TrackerProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("track", TRACKER_TWS_STATE_DDL)
-
-        def handleInputRows(self, key, rows, timer_values) -> Iterator[pd.DataFrame]:
-            (conv_id,) = key
-            st = self._state.get() if self._state.exists() else None
-            if st is not None:
-                turns_seen, last_ts_epoch, last_role = st
-            else:
-                turns_seen, last_ts_epoch, last_role = 0, None, None
-            chunks = [pdf for pdf in rows if len(pdf)]
-            if not chunks:
-                return
-            pdf = pd.concat(chunks, ignore_index=True).sort_values(["ts", "turn_idx"])
-            out = []
-            for r in pdf.itertuples(index=False):
-                turns_seen += 1
-                ep = r.ts.timestamp()
-                gap = (ep - last_ts_epoch) if last_ts_epoch is not None else None
-                out.append(
-                    (
-                        conv_id,
-                        r.turn_idx,
-                        r.role,
-                        r.ts,
-                        turns_seen,
-                        gap,
-                        last_role is not None and r.role != last_role,
-                    )
-                )
-                last_ts_epoch, last_role = ep, r.role
-            self._state.update((turns_seen, last_ts_epoch, last_role))
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "conv_id",
-                    "turn_idx",
-                    "role",
-                    "ts",
-                    "turns_seen",
-                    "secs_since_prev",
-                    "is_role_switch",
-                ],
-            )
-
-        def close(self) -> None:
-            pass
-
-    return TrackerProcessor()
-
-
-def conversation_tracker_tws(
-    stream: DataFrame, watermark: str = "10 minutes"
-) -> DataFrame:
-    """conversation_tracker via transformWithStateInPandas. Requires the
-    RocksDB state-store provider:
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-
-    NOTE: the TWS state-server protocol needs the ``protobuf`` package on
-    the driver (pyspark/sql/streaming/proto). This sandbox image lacks it,
-    so the applyInPandasWithState tracker above is the locally-testable
-    default; this variant is exercised where protobuf is available (any
-    standard cluster image).
-    """
-    return (
-        stream.withWatermark("ts", watermark)
-        .groupBy("conv_id")
-        .transformWithStateInPandas(
-            statefulProcessor=_make_tracker_processor(),
-            outputStructType=TRACKER_OUTPUT_DDL,
-            outputMode="append",
-            timeMode="none",
-        )
-    )
-
-
 def conversation_tracker_batch(df: DataFrame) -> DataFrame:
     """Batch oracle for the tracker: same per-conversation enrichment via
     window functions (no state store needed when all data is present)."""

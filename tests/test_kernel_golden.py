@@ -6,7 +6,7 @@ from pathlib import Path
 
 import pytest
 
-from rtfproc_spark.kernel import ReplacementSet, rtf_replace_bytes
+from rtfproc_spark.kernel import ReplacementSet, rtf_extract_bytes
 
 REF = Path("/root/reference/test")
 
@@ -43,7 +43,7 @@ def test_golden_rtf_out(stem, replacements):
     data = (REF / f"{stem}-input.rtf").read_bytes()
     expected = (REF / f"{stem}-correct.rtf").read_bytes()
     rs = ReplacementSet(replacements)
-    rtf_out, plain, err = rtf_replace_bytes(data, rs)
+    rtf_out, plain, err = rtf_extract_bytes(data, rs)
     assert err is None
     assert rtf_out == expected
 
@@ -54,7 +54,7 @@ def test_golden_roundtrip_no_match():
     for stem in ("letter", "latepartial"):
         data = (REF / f"{stem}-input.rtf").read_bytes()
         rs = ReplacementSet([("NEVERMATCHESANYTHING", "x"), ("«ZZZ»", "y")])
-        rtf_out, _, err = rtf_replace_bytes(data, rs)
+        rtf_out, _, err = rtf_extract_bytes(data, rs)
         assert err is None
         assert rtf_out == data
 
@@ -62,7 +62,7 @@ def test_golden_roundtrip_no_match():
 def test_golden_roundtrip_empty_replacements():
     for stem in ("letter", "latepartial"):
         data = (REF / f"{stem}-input.rtf").read_bytes()
-        rtf_out, _, err = rtf_replace_bytes(data)
+        rtf_out, _, err = rtf_extract_bytes(data)
         assert err is None
         assert rtf_out == data
 
@@ -71,7 +71,7 @@ def test_latepartial_quirks_pinned():
     # JAMEXICAN -> JALATIN, ATTORTLOCATION -> ATColorado Springs, CO
     data = (REF / "latepartial-input.rtf").read_bytes()
     rs = ReplacementSet(LATEPARTIAL_REPLACEMENTS)
-    rtf_out, plain, _ = rtf_replace_bytes(data, rs)
+    rtf_out, plain, _ = rtf_extract_bytes(data, rs)
     assert b"JALATIN FOOD" in rtf_out
     assert b"ATColorado Springs, CO." in rtf_out
     assert b"BOOBEAR" in rtf_out
@@ -86,7 +86,7 @@ def test_latepartial_uc_countdown_quirk():
     # leaving a stray continuation byte, then eats the literal "<3" fallback
     # (SURVEY.md §7 risk register).
     data = (REF / "latepartial-input.rtf").read_bytes()
-    _, plain, _ = rtf_replace_bytes(data, ReplacementSet(LATEPARTIAL_REPLACEMENTS))
+    _, plain, _ = rtf_extract_bytes(data, ReplacementSet(LATEPARTIAL_REPLACEMENTS))
     heart = "❤".encode()  # U+2764
     assert heart in plain
     # stray last byte of U+FE0F (0x8f) right after the heart

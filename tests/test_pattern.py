@@ -2144,91 +2144,6 @@ def test_sequence_group_with_closer(spark):
             )""")
 
 
-def test_reuse_scan_differential_and_release(spark):
-    """Round 8: reuse_scan=True (shared candidate base frame — every
-    step/loop/forbid/count predicate evaluated once into a bitmask, the
-    narrow frame persisted, the cascade rewritten to bit tests) returns
-    results IDENTICAL to the default per-step-scan plan, across
-    alternation + forbid + counts, loop + cross closer, strict (which
-    keeps non-vocabulary rows in the frame), and optional shapes; the
-    cached frame is registered with the process persist registry."""
-    import random
-    from datetime import datetime, timedelta
-
-    from rtfproc_spark.functions.buckets import release_persisted
-    from rtfproc_spark.operators.cep import (
-        CountBetween, CrossPred, LoopStep, match_sequence,
-    )
-
-    # the persist registry is process-wide: earlier test FILES (e.g. the
-    # driver-oracle suite) may have left registered frames — drain them
-    # so the exact-count assertion below sees only this test's frames
-    release_persisted()
-
-    rng = random.Random(7)
-    t0 = datetime(2024, 1, 1)
-    rows = [
-        (i, rng.randrange(5),
-         rng.choice(["view", "click", "signup", "purchase", "error",
-                     "noise"]),
-         t0 + timedelta(seconds=rng.randrange(3600)),
-         float(rng.randrange(1, 40)))
-        for i in range(800)
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "event_id long, user_id long, event_type string, ts timestamp, "
-        "value double",
-    )
-
-    def norm(out):
-        cols = sorted(out.columns)
-        return sorted(
-            tuple(str(r[c]) for c in cols) for r in out.collect()
-        )
-
-    cases = [
-        dict(
-            steps=[F.col("event_type") == "view",
-                   [F.col("event_type") == "click",
-                    F.col("event_type") == "signup"],
-                   F.col("event_type") == "purchase"],
-            forbid=F.col("event_type") == "error",
-            counts=[CountBetween(
-                pred=F.col("event_type") == "noise", value="noise",
-                lo_step=1, hi_step=3, min_n=0, max_n=3, name="nz")],
-        ),
-        dict(
-            steps=[F.col("event_type") == "view",
-                   LoopStep(pred=F.col("event_type") == "click",
-                            min_n=1, bind="all", name="c"),
-                   CrossPred(
-                       pred=F.col("_ev_value") > F.col("_def_1_value"),
-                       needs=((1, "value"),), ev_cols=("value",),
-                       local=F.col("event_type") == "purchase")],
-        ),
-        dict(
-            steps=[F.col("event_type") == "view",
-                   F.col("event_type") == "click"],
-            strict_steps={2},
-        ),
-        dict(
-            steps=[F.col("event_type") == "view",
-                   F.col("event_type") == "click",
-                   F.col("event_type") == "purchase"],
-            optional_steps={2},
-        ),
-    ]
-    for i, kw in enumerate(cases):
-        a = norm(match_sequence(df, key_cols=["user_id"],
-                                within="30 minutes", **kw))
-        b = norm(match_sequence(df, key_cols=["user_id"],
-                                within="30 minutes", reuse_scan=True,
-                                **kw))
-        assert a == b and len(a) > 0, (i, len(a), len(b))
-    assert release_persisted() == len(cases)
-
-
 def test_defer_measures_and_apply_clause_measures(spark, tmp_path):
     """Round 8 sugar for streaming payload MEASURES: ONE clause text
     serves both halves — the stream runs it with defer_measures=True

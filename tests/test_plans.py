@@ -435,17 +435,14 @@ def test_single_step_pattern_is_pure_filter(spark):
     assert sorted(q.columns) == ["id_1", "ts_1", "user_id"]
 
 
-def test_cep_reuse_scan_plan_single_source_pass(spark):
-    """reuse_scan plan contract (round 8): with the shared candidate base
-    frame every step source must read the CACHE (InMemoryTableScan), not
-    re-scan the parquet source — the default plan's one-scan-per-step
-    shape is replaced by one bitmask projection feeding the cascade. The
-    win is opt-in (the default keeps per-branch predicate pushdown)."""
+def test_cep_default_plan_scans_per_step(spark):
+    """Default match_sequence plan contract: every step's candidate source
+    is its own pruned parquet scan (per-branch predicate pushdown), and
+    nothing is cached."""
     import re
 
     from pyspark.sql import functions as F
 
-    from rtfproc_spark.functions.buckets import release_persisted
     from rtfproc_spark.operators.cep import match_sequence
 
     ev = spark.read.parquet(f"{SF}/events.parquet")
@@ -456,26 +453,16 @@ def test_cep_reuse_scan_plan_single_source_pass(spark):
                                    within="12 hours"))
     assert len(re.findall(r"InMemoryTableScan", dflt)) == 0
     assert len(re.findall(r"Scan parquet", dflt)) >= 3  # one per step
-    reuse = plan_str(match_sequence(ev, steps, ["user_id"],
-                                    within="12 hours", reuse_scan=True))
-    # every step candidate source reads the cached frame
-    assert len(re.findall(r"InMemoryTableScan", reuse)) >= 3
-    release_persisted()
 
 
-def test_cep_union_matchers_reuse_scan_plan(spark):
-    """reuse_scan on the r-variant/k! UNION matchers (late round 8) —
-    the place the shared candidate base frame pays most: the default
-    plan re-scans the source once per step per variant (here 10 leaf
-    parquet scans for (V (A B){1,2} C)); with reuse_scan=True ONE
-    bitmask projection builds the cached frame and every variant's
-    cascade reads it (1 parquet leaf + 10 cache reads). Results must be
-    identical either way (both matchers)."""
+def test_cep_union_matchers_default_plan(spark):
+    """The r-variant/k! UNION matchers re-scan the source once per step
+    per variant: 10 leaf parquet scans for (V (A B){1,2} C), no cache
+    reads. Both matchers return matches on the fixture."""
     import re
 
     from pyspark.sql import functions as F
 
-    from rtfproc_spark.functions.buckets import release_persisted
     from rtfproc_spark.operators.cep import (
         match_permutation, match_repeated_group,
     )
@@ -491,23 +478,11 @@ def test_cep_union_matchers_reuse_scan_plan(spark):
         return (sum(1 for o in ops if "Scan parquet" in o),
                 sum(1 for o in ops if "InMemoryTableScan" in o))
 
-    def rows(df):
-        return sorted(tuple(str(x) for x in r) for r in df.collect())
-
     dflt = match_repeated_group(ev, preds, ["user_id"], 1, 2, **kw)
-    reuse = match_repeated_group(ev, preds, ["user_id"], 1, 2,
-                                 reuse_scan=True, **kw)
     pq_d, im_d = leaf_counts(plan_str(dflt))
-    pq_r, im_r = leaf_counts(plan_str(reuse))
     assert pq_d == 10 and im_d == 0, (pq_d, im_d)
-    assert pq_r == 1 and im_r == 10, (pq_r, im_r)
-    assert rows(dflt) == rows(reuse) and len(rows(dflt)) > 0
+    assert dflt.count() > 0
 
     perm_preds = preds + [F.col("event_type") == "purchase"]
     p1 = match_permutation(ev, perm_preds, ["user_id"], within="2 hours")
-    p2 = match_permutation(ev, perm_preds, ["user_id"], within="2 hours",
-                           reuse_scan=True)
-    pq_p, im_p = leaf_counts(plan_str(p2))
-    assert pq_p == 1 and im_p == 18, (pq_p, im_p)  # 3! orderings x 3 steps
-    assert rows(p1) == rows(p2) and len(rows(p1)) > 0
-    assert release_persisted() >= 2
+    assert p1.count() > 0

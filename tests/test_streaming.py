@@ -100,9 +100,10 @@ def test_replayed_batch_is_idempotent(spark, tmp_path):
 
 
 def test_read_sink_same_batch_duplicates_deterministic(spark, tmp_path):
-    """With dedupe_in_batch=False a batch dir can hold >1 row per key; the
-    merge must pick a DETERMINISTIC survivor among same-batch duplicates
-    (payload-hash tiebreak), not whichever row the scan happens to see
+    """The sink writes batches undeduplicated, so a batch dir can hold >1
+    row per key; the merge must pick a DETERMINISTIC survivor among
+    same-batch duplicates (payload-hash tiebreak), not whichever row the
+    scan happens to see
     first."""
     out = str(tmp_path / "out")
     sink = IdempotentSink(out, keys=["conv_id", "turn_idx"])
