@@ -2108,6 +2108,206 @@ def decode_buffer_nav(blob: bytes | None, m: int) -> tuple[list, list]:
     return out, tail
 
 
+# --- key-bucketed keyed state (stream CEP) ----------------------------------
+# The stream matcher groups by a fixed set of hash buckets of the key, not by
+# the key: one applyInPandasWithState call (and one state row) per bucket
+# amortises Spark's per-group framing and the per-call pandas work over all
+# of the bucket's keys — Flink's key groups. Each bucket row holds its keys'
+# per-key (partials, buffer) blobs and timeouts side by side, so the per-key
+# codecs above are unchanged.
+
+STATE_BUCKETS = 1024
+BUCKET_COL = "_cep_bucket"
+_NO_TIMEOUT = -1  # GroupState.NO_TIMESTAMP
+
+
+def _bucket_of(key_col: str) -> Column:
+    """The key's state bucket. Null keys get bucket -1 of their own: an
+    integral key column with a null in it would reach pandas as float64
+    and lose the exact value of keys beyond 2**53."""
+    return F.when(F.col(key_col).isNull(), F.lit(-1)).otherwise(
+        F.pmod(F.xxhash64(key_col), F.lit(STATE_BUCKETS))
+    )
+
+
+class _KeyState:
+    """The GroupState surface the per-key matcher uses, over one key's slot
+    in its bucket row. The timeout starts unset on every call, like
+    Spark's: a key keeps a timeout only if the call sets it again."""
+
+    __slots__ = ("get", "exists", "hasTimedOut", "timeout", "_now_ms", "_wm_ms")
+
+    def __init__(self, value, timed_out: bool, now_ms: int, wm_ms: int):
+        self.get = value
+        self.exists = value is not None
+        self.hasTimedOut = timed_out
+        self.timeout = _NO_TIMEOUT
+        self._now_ms = now_ms
+        self._wm_ms = wm_ms
+
+    def update(self, value) -> None:
+        self.get, self.exists = value, True
+
+    def remove(self) -> None:
+        self.get, self.exists = None, False
+
+    def getCurrentWatermarkMs(self) -> int:
+        return self._wm_ms
+
+    def setTimeoutDuration(self, ms: int) -> None:
+        self.timeout = self._now_ms + ms
+
+    def setTimeoutTimestamp(self, ms: int) -> None:
+        self.timeout = ms
+
+
+def _f64(col):
+    import numpy as np
+
+    if col.dtype.kind in "fiu":
+        return col.to_numpy(dtype=np.float64)
+    import pandas as pd
+
+    # nullable / decimal payloads: NULL -> NaN, every comparison False
+    return np.array(
+        [float("nan") if pd.isna(v) else float(v) for v in col],
+        dtype=np.float64,
+    )
+
+
+def _bucket_events(
+    pdfs,
+    key_col: str,
+    time_col: str,
+    id_col: str,
+    type_col: str,
+    aux_cols=(),
+) -> list:
+    """One bucket's rows split per key: ``[(key, events)]`` with events
+    ``(ts_ns, id, type)`` — plus the ``aux_cols`` values as a list of
+    doubles (NULL -> NaN) when there are any — in (ts, id) order. One
+    numpy sort for the whole bucket; rows with a null ts or id are dropped
+    (null comparisons are false, so they can neither anchor nor advance in
+    the batch algebra). A null key is a key of its own (``None``)."""
+    import numpy as np
+    import pandas as pd
+
+    chunks = [p for p in pdfs if len(p)]
+    if not chunks:
+        return []
+    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    ts = pdf[time_col].to_numpy().astype("datetime64[ns]", copy=False).view(np.int64)
+    ids = pdf[id_col].to_numpy()
+    ok = ts != _I64_NONE  # NaT
+    if ids.dtype.kind not in "iu":  # a null id widens the column
+        ok &= ~pd.isna(ids)
+    keys = pdf[key_col].to_numpy()
+    if keys.dtype.kind in "iu":
+        uniques, codes = np.unique(keys, return_inverse=True)
+    else:
+        codes, uniques = pd.factorize(keys)
+    sel = np.flatnonzero(ok)
+    if not len(sel):
+        return []
+    order = sel[np.lexsort((ids[sel], ts[sel], codes[sel]))]
+    codes = codes[order]
+    cols = [
+        ts[order].tolist(),
+        ids[order].astype(np.int64).tolist(),
+        pdf[type_col].to_numpy(dtype=object)[order].tolist(),
+    ]
+    if aux_cols:
+        vals = np.column_stack([_f64(pdf[c]) for c in aux_cols])
+        cols.append(vals[order].tolist())
+    events = list(zip(*cols))
+    keys = uniques.tolist()
+    cuts = [0, *(np.flatnonzero(codes[1:] != codes[:-1]) + 1).tolist(), len(codes)]
+    return [
+        (keys[codes[a]] if codes[a] >= 0 else None, events[a:b])
+        for a, b in zip(cuts, cuts[1:])
+    ]
+
+
+def _advance_bucket(key_fn, state: GroupState, keyed: list, timeout_conf: str) -> list:
+    """Advance one bucket: ``key_fn(key, events, key_state) -> rows`` runs
+    once per key with data (``hasTimedOut=False``) and once, with no
+    events and ``hasTimedOut=True``, per stored key without data whose
+    timeout is below Spark's threshold (``tmo < watermark`` for
+    EventTimeTimeout, ``tmo < batch processing time`` for
+    ProcessingTimeTimeout). Keys not called keep their state and timeout.
+    The bucket's own timeout is the minimum of its keys'; a bucket with no
+    key left is removed. Returns the emitted rows of all keys.
+
+    The bucket row records ``STATE_BUCKETS``: a checkpoint written with
+    another bucket count routes keys elsewhere, and raises here instead of
+    silently missing them."""
+    if state.exists:
+        keys, partials, buffers, tmos, n_buckets = state.get
+        if n_buckets != STATE_BUCKETS:
+            raise ValueError(
+                f"CEP state was written with {n_buckets} key buckets, this "
+                f"build uses {STATE_BUCKETS}, so keys would be looked up in "
+                "the wrong bucket. Automatic migration is not supported: "
+                "restart the streaming query from a FRESH checkpoint "
+                "location (matches already emitted to the sink are "
+                "preserved by the idempotent sink's key-based merge)."
+            )
+    else:
+        keys, partials, buffers, tmos = (), (), (), ()
+    now_ms = state.getCurrentProcessingTimeMs()
+    wm_ms = state.getCurrentWatermarkMs()
+    threshold = {
+        GroupStateTimeout.EventTimeTimeout: wm_ms,
+        GroupStateTimeout.ProcessingTimeTimeout: now_ms,
+    }.get(timeout_conf)
+    slot = {k: j for j, k in enumerate(keys)}
+    out_k, out_p, out_b, out_t = [], [], [], []
+    rows: list = []
+    called = set()
+
+    def run(key, events, j, timed_out):
+        ks = _KeyState(
+            None if j is None else (partials[j], buffers[j]),
+            timed_out, now_ms, wm_ms,
+        )
+        rows.extend(key_fn(key, events, ks))
+        if ks.exists:
+            out_k.append(key)
+            out_p.append(ks.get[0])
+            out_b.append(ks.get[1])
+            out_t.append(ks.timeout)
+
+    for key, events in keyed:
+        j = slot.get(key)
+        called.add(j)
+        run(key, events, j, False)
+    for j, key in enumerate(keys):
+        if j in called:
+            continue
+        t = tmos[j]
+        if threshold is not None and t != _NO_TIMEOUT and t < threshold:
+            run(key, [], j, True)
+        else:
+            out_k.append(key)
+            out_p.append(partials[j])
+            out_b.append(buffers[j])
+            out_t.append(t)
+    if not out_k:
+        if state.exists:
+            state.remove()
+        return rows
+    state.update((out_k, out_p, out_b, out_t, STATE_BUCKETS))
+    live = [t for t in out_t if t != _NO_TIMEOUT]
+    if live:
+        if timeout_conf == GroupStateTimeout.EventTimeTimeout:
+            state.setTimeoutTimestamp(min(live))
+        else:
+            # a key due at exactly this batch time is not yet timed out
+            # (strict <), but a duration must be positive
+            state.setTimeoutDuration(max(min(live) - now_ms, 1))
+    return rows
+
+
 def match_sequence_stream(
     stream: DataFrame,
     step_values: list,
@@ -2257,14 +2457,27 @@ def match_sequence_stream(
     transits the buffer — the price of "any event keeps the session
     alive".
 
-    Scale note: the transport is Arrow-batched, but the state machine
-    itself advances PER EVENT in Python (inherent to
-    ``applyInPandasWithState``'s model) — fine for the per-key event rates
-    a watermarked stream implies, but a single key sustaining very high
-    rates on a continuous job will bottleneck on that Python loop; the
-    batch twin is pure join algebra, so bursty backfills should replay
-    through :func:`match_sequence` instead. A JVM
-    ``transformWithState`` port is the long-term fix.
+    Scale note: keyed state is KEY-BUCKETED. The operator groups by
+    ``_cep_bucket = pmod(xxhash64(key_col), STATE_BUCKETS)`` (1024 hash
+    buckets, Flink's key groups, plus bucket -1 for a null key), not by
+    the key, so Spark's per-group framing and the per-call pandas work are
+    paid once per bucket, not once per key: each call sorts the bucket's
+    rows once with numpy, splits them per key, runs the per-key machine
+    for every key with data and for every key whose own timeout fell
+    below Spark's threshold (the watermark, or the batch processing time
+    with ``idle_timeout_ms``), and emits one frame. A bucket's state row
+    holds its keys' per-key ``(partials, buffer)`` blobs and timeouts, so
+    ``numRowsTotal`` in the state-operator progress counts buckets, not
+    keys. The row also records the bucket count: a checkpoint written with
+    another count raises a targeted fresh-checkpoint ``ValueError``.
+    Checkpoints of the earlier per-key layout (one ``partials, buffer``
+    row per key) fail Spark's state-schema check on restart and need a
+    fresh checkpoint location too. The state machine itself still
+    advances PER EVENT in Python — fine for the per-key event rates a
+    watermarked stream implies, but a single key sustaining very high
+    rates on a continuous job will bottleneck on that loop; the batch
+    twin is pure join algebra, so bursty backfills should replay through
+    :func:`match_sequence` instead.
 
     ``forbid_value`` is the negation twin of batch ``forbid``: an event of
     that type POISONS every in-flight partial whose anchor precedes it
@@ -2283,8 +2496,14 @@ def match_sequence_stream(
     discipline (and per-event cost) as ``session_gap``; ordered mode
     already sees every event.  Same constraints as batch: the anchor, a
     loop/optional, or the step right after one cannot be strict."""
+    import numpy as np
     import pandas as pd
 
+    if idle_timeout_ms is not None and idle_timeout_ms <= 0:
+        raise ValueError(
+            f"idle_timeout_ms must be a positive number of milliseconds, "
+            f"got {idle_timeout_ms}"
+        )
     if any(isinstance(s, CrossPred) for s in step_values):
         raise ValueError(
             "CrossPred objects carry JVM Column predicates and are "
@@ -2724,6 +2943,10 @@ def match_sequence_stream(
             "must be distinct and must not collide with the "
             "ts_k/id_k/branch_k/session_id pattern columns or the key"
         )
+    if key_col not in stream.columns:
+        raise ValueError(f"key column {key_col!r} not in the stream schema")
+    key_ddl = stream.schema[key_col].dataType.simpleString()
+    out_typed[0] = (key_col, key_ddl, None)
     out_ddl = ", ".join(f"{n} {t}" for n, t, _ in out_typed)
     pd_conv = {n: cv for n, _, cv in out_typed}
     within_ns = pd.Timedelta(within).value
@@ -3149,57 +3372,28 @@ def match_sequence_stream(
                 )
         return partials, last_end, sess
 
-    def _events_of(pdfs, with_nav=False):
-        chunks = [p for p in pdfs if len(p)]
-        if not chunks:
-            return []
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            # null ts/id can neither anchor nor advance in the batch
-            # algebra (null comparisons are false) — drop instead of
-            # crashing on NaT->int
-            .dropna(subset=[time_col, id_col])
-            .sort_values([time_col, id_col])
-            .reset_index(drop=True)
-        )
-        if with_nav:
-            return [
-                (
-                    int(pd.Timestamp(getattr(r, time_col)).value),
-                    int(getattr(r, id_col)),
-                    getattr(r, type_col),
-                    [
-                        float("nan") if pd.isna(getattr(r, c))
-                        else float(getattr(r, c))
-                        for c in aux_cols
-                    ],
-                )
-                for r in pdf.itertuples(index=False)
-            ]
-        return [
-            (
-                int(pd.Timestamp(getattr(r, time_col)).value),
-                int(getattr(r, id_col)),
-                getattr(r, type_col),
-            )
-            for r in pdf.itertuples(index=False)
-        ]
-
     def _emit(rows):
-        out = pd.DataFrame(rows, columns=out_names)
-        for c in out.columns:
+        # column by column: ns timestamps without a null view as
+        # datetime64 directly, instead of a to_datetime pass per column
+        out = {}
+        for c, vals in zip(out_names, zip(*rows)):
             cv = pd_conv[c]
             if cv == "datetime":
-                out[c] = pd.to_datetime(out[c])
+                out[c] = (
+                    pd.to_datetime(pd.Series(vals, dtype="Int64"))
+                    if None in vals
+                    else np.array(vals, dtype=np.int64).view("datetime64[ns]")
+                )
             elif cv is not None:
-                out[c] = out[c].astype(cv)
-        yield out
+                out[c] = pd.array(vals, dtype=cv)
+            else:
+                out[c] = list(vals)
+        return pd.DataFrame(out, copy=False)
 
-    def _fn_ordered(key, pdfs, state: GroupState):
-        (key_val,) = key
+    def _fn_ordered(key_val, events, state):
         if state.hasTimedOut:
             state.remove()
-            return
+            return []
         partials, last_end, _ = (
             decode_state(state.get[0]) if state.exists else ([], None, None)
         )
@@ -3208,12 +3402,7 @@ def match_sequence_stream(
         if cross or loc:
             # ordered mode carries the cross/local payload transiently
             # (events are never buffered): flags empty, values at ev[4]
-            events = [
-                (t, i, ty, (), vals)
-                for t, i, ty, vals in _events_of(pdfs, with_nav=True)
-            ]
-        else:
-            events = _events_of(pdfs)
+            events = [(t, i, ty, (), vals) for t, i, ty, vals in events]
         partials, last_end, _ = _process(
             partials, events, rows, key_val, last_end
         )
@@ -3229,11 +3418,9 @@ def match_sequence_stream(
             # an empty tombstone per key forever (a continuous job would
             # otherwise grow state with every key ever seen)
             state.remove()
-        if rows:
-            yield from _emit(rows)
+        return rows
 
-    def _fn_buffered(key, pdfs, state: GroupState):
-        (key_val,) = key
+    def _fn_buffered(key_val, events, state):
         tail: list = []
         if state.exists:
             partials, last_end, sess = decode_state(state.get[0])
@@ -3257,12 +3444,12 @@ def match_sequence_stream(
             if nav or gap_ns is not None or strict or has_wild:
                 buffer.extend(
                     (t, i, vidx.get(typ, KEEPALIVE), vals)
-                    for t, i, typ, vals in _events_of(pdfs, with_nav=True)
+                    for t, i, typ, vals in events
                 )
             else:
                 buffer.extend(
                     (t, i, vidx[typ], vals)
-                    for t, i, typ, vals in _events_of(pdfs, with_nav=True)
+                    for t, i, typ, vals in events
                     if typ in vidx
                 )
         elif gap_ns is not None or strict:
@@ -3271,12 +3458,12 @@ def match_sequence_stream(
             # types transit the buffer (non-vocabulary as keepalives)
             buffer.extend(
                 (t, i, vidx.get(typ, KEEPALIVE))
-                for t, i, typ in _events_of(pdfs)
+                for t, i, typ in events
             )
         else:
             buffer.extend(
                 (t, i, vidx[typ])
-                for t, i, typ in _events_of(pdfs)
+                for t, i, typ in events
                 if typ in vidx
             )
         buffer.sort(key=lambda e: (e[0], e[1]))
@@ -3376,8 +3563,7 @@ def match_sequence_stream(
                 )
         elif state.exists:
             state.remove()
-        if rows:
-            yield from _emit(rows)
+        return rows
 
     if ordered:
         timeout_conf = (
@@ -3389,13 +3575,26 @@ def match_sequence_stream(
     else:
         timeout_conf = GroupStateTimeout.EventTimeTimeout
         fn = _fn_buffered
+
+    def _fn_bucket(_bucket, pdfs, state: GroupState):
+        keyed = _bucket_events(pdfs, key_col, time_col, id_col, type_col, aux_cols)
+        rows = _advance_bucket(fn, state, keyed, timeout_conf)
+        if rows:
+            yield _emit(rows)
+
     return (
         stream.withWatermark(time_col, watermark)
-        .groupBy(key_col)
+        # the matcher reads only these columns: do not shuffle the rest
+        .select(*dict.fromkeys([key_col, time_col, id_col, type_col, *aux_cols]))
+        .withColumn(BUCKET_COL, _bucket_of(key_col))
+        .groupBy(BUCKET_COL)
         .applyInPandasWithState(
-            fn,
+            _fn_bucket,
             outputStructType=out_ddl,
-            stateStructType="partials binary, buffer binary",
+            stateStructType=(
+                f"keys array<{key_ddl}>, partials array<binary>, "
+                "buffer array<binary>, tmo array<bigint>, buckets int"
+            ),
             outputMode="append",
             timeoutConf=timeout_conf,
         )

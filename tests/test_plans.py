@@ -486,3 +486,23 @@ def test_cep_union_matchers_default_plan(spark):
     perm_preds = preds + [F.col("event_type") == "purchase"]
     p1 = match_permutation(ev, perm_preds, ["user_id"], within="2 hours")
     assert p1.count() > 0
+
+
+def test_stream_cep_groups_by_key_bucket(spark, tmp_path):
+    """The stream matcher's stateful operator groups on the hash bucket of
+    the key, not on the key: a fallback to one group per user fails here."""
+    from rtfproc_spark.operators.pattern import match_recognize_stream
+
+    stream = spark.readStream.schema(
+        "event_id long, user_id long, event_type string, ts timestamp, value double"
+    ).parquet(str(tmp_path))
+    m = match_recognize_stream(
+        stream, "V C P", {"V": "view", "C": "click", "P": "purchase"},
+        key_col="user_id", within="10 minutes", ordered=False,
+    )
+    p = plan_str(m, "simple")
+    node = re.search(r"FlatMapGroupsInPandasWithState.*", p)
+    assert node, p
+    grouping = re.match(r"[^\[]*\[([^\]]*)\]", node.group(0)).group(1)
+    assert "_cep_bucket" in grouping and "user_id" not in grouping, node.group(0)
+    assert "xxhash64(user_id" in p, p

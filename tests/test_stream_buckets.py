@@ -1,0 +1,181 @@
+"""Key-bucketed stream CEP state, without Spark: the bucket function is
+driven with ``GroupState`` objects built directly, and checked against
+Spark's per-key timeout rules (``tmo < watermark`` for EventTimeTimeout,
+``tmo < batch processing time`` for ProcessingTimeTimeout)."""
+
+import json
+
+import pandas as pd
+import pytest
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from rtfproc_spark.operators.cep import (
+    STATE_BUCKETS,
+    _advance_bucket,
+    _bucket_events,
+    match_sequence_stream,
+)
+
+ET = GroupStateTimeout.EventTimeTimeout
+PT = GroupStateTimeout.ProcessingTimeTimeout
+NOW_MS, WM_MS = 5_000, 1_000
+
+
+def _state(conf, value=None, timed_out=False):
+    return GroupState(
+        optionalValue=value,
+        batchProcessingTimeMs=NOW_MS,
+        eventTimeWatermarkMs=WM_MS,
+        timeoutConf=conf,
+        hasTimedOut=timed_out,
+        watermarkPresent=True,
+        defined=value is not None,
+        updated=False,
+        removed=False,
+        timeoutTimestamp=-1,
+        keyAsUnsafe=None,
+        valueSchema=None,
+    )
+
+
+def _bucket(tmo: dict, n_buckets=STATE_BUCKETS):
+    keys = list(tmo)
+    return (
+        keys,
+        [f"p{k}".encode() for k in keys],
+        [f"b{k}".encode() for k in keys],
+        [tmo[k] for k in keys],
+        n_buckets,
+    )
+
+
+class Recorder:
+    """A per-key function that logs its calls and, per key, sets a
+    timeout (``set_tmo``), keeps its state without one, or removes it."""
+
+    def __init__(self, conf, set_tmo=(), remove=()):
+        self.conf, self.set_tmo, self.remove = conf, dict(set_tmo), set(remove)
+        self.calls = []
+
+    def __call__(self, key, events, state):
+        self.calls.append((key, len(events), state.hasTimedOut))
+        if key in self.remove:
+            state.remove()
+            return []
+        state.update((b"new", b""))
+        if key in self.set_tmo:
+            if self.conf == ET:
+                state.setTimeoutTimestamp(self.set_tmo[key])
+            else:
+                state.setTimeoutDuration(self.set_tmo[key])
+        return [(key, len(events))]
+
+
+def _tmo_of(state):
+    keys, _p, _b, tmo, _n = state.get
+    return dict(zip(keys, tmo))
+
+
+def test_key_with_data_called_once_not_timed_out():
+    for conf, passed in ((ET, WM_MS - 500), (PT, NOW_MS - 500)):
+        st = _state(conf, _bucket({7: passed}))
+        fn = Recorder(conf)
+        rows = _advance_bucket(fn, st, [(7, [(1, 1, "A")])], conf)
+        assert fn.calls == [(7, 1, False)]
+        assert rows == [(7, 1)]
+
+
+@pytest.mark.parametrize("conf,threshold", [(ET, WM_MS), (PT, NOW_MS)])
+def test_keys_without_data_fire_on_strict_less_than(conf, threshold):
+    st = _state(conf, _bucket({1: threshold - 1, 2: threshold, 3: threshold + 1, 4: -1}))
+    fn = Recorder(conf, remove={1})
+    _advance_bucket(fn, st, [], conf)
+    assert fn.calls == [(1, 0, True)]
+    # keys not called keep their state and their timeout
+    assert _tmo_of(st) == {2: threshold, 3: threshold + 1, 4: -1}
+    assert st.get[1][st.get[0].index(2)] == b"p2"
+
+
+def test_timeout_not_set_again_is_cleared():
+    st = _state(ET, _bucket({1: WM_MS + 10, 2: WM_MS - 10}))
+    fn = Recorder(ET)
+    _advance_bucket(fn, st, [(1, [(1, 1, "A")])], ET)
+    # key 1 had data, key 2 timed out: neither set a timeout again
+    assert sorted(fn.calls) == [(1, 1, False), (2, 0, True)]
+    assert _tmo_of(st) == {1: -1, 2: -1}
+    assert json.loads(st.json())["timeoutTimestamp"] == -1
+
+
+@pytest.mark.parametrize("conf", [ET, PT])
+def test_bucket_timeout_is_min_of_key_timeouts(conf):
+    st = _state(conf, _bucket({1: WM_MS + 900, 2: NOW_MS + 900, 3: -1}))
+    fn = Recorder(conf, set_tmo={9: WM_MS + 300 if conf == ET else 300})
+    _advance_bucket(fn, st, [(9, [(1, 1, "A")])], conf)
+    tmo = _tmo_of(st)
+    assert tmo[9] == (WM_MS + 300 if conf == ET else NOW_MS + 300)
+    want = min(t for t in tmo.values() if t != -1)
+    assert json.loads(st.json())["timeoutTimestamp"] == want
+
+
+def test_empty_bucket_is_removed():
+    st = _state(ET, _bucket({1: WM_MS - 1, 2: WM_MS - 2}))
+    fn = Recorder(ET, remove={1, 2, 3})
+    assert _advance_bucket(fn, st, [(3, [(1, 1, "A")])], ET) == []
+    assert not st.exists
+    assert json.loads(st.json())["removed"]
+    # a bucket that never had state stays absent
+    st = _state(ET)
+    _advance_bucket(fn, st, [(3, [(1, 1, "A")])], ET)
+    assert not st.exists and not json.loads(st.json())["updated"]
+
+
+def test_bucket_count_fence():
+    st = _state(ET, _bucket({1: -1}, n_buckets=STATE_BUCKETS // 2))
+    with pytest.raises(ValueError, match="FRESH checkpoint"):
+        _advance_bucket(Recorder(ET), st, [], ET)
+
+
+def test_null_and_string_keys():
+    t = pd.to_datetime(["2024-01-01 00:00:03", "2024-01-01 00:00:01",
+                        "2024-01-01 00:00:02", None, "2024-01-01 00:00:01"])
+    pdf = pd.DataFrame({
+        "user_id": ["b", None, "a", "a", "b"],
+        "ts": t,
+        "event_id": [5, 2, 3, 4, 1],
+        "event_type": ["C", "A", "B", "A", None],
+        "value": [1.5, None, 3.0, 4.0, 5.0],
+    })
+    keyed = _bucket_events([pdf.iloc[:2], pdf.iloc[2:]], "user_id", "ts",
+                           "event_id", "event_type", ["value"])
+    ns = [int(x.value) for x in t[:3]]
+    # one entry per key, null key included; the null-ts row is dropped;
+    # events in (ts, id) order with the aux values as doubles
+    by_key = dict(keyed)
+    assert len(keyed) == len(by_key) == 3
+    assert by_key["a"] == [(ns[2], 3, "B", [3.0])]
+    assert by_key["b"] == [(ns[1], 1, None, [5.0]), (ns[0], 5, "C", [1.5])]
+    ((t0, i0, ty0, (v0,)),) = by_key[None]
+    assert (t0, i0, ty0) == (ns[1], 2, "A") and v0 != v0  # NULL -> NaN
+
+    fn = Recorder(ET, set_tmo={"a": WM_MS + 1}, remove={None})
+    st = _state(ET, _bucket({None: WM_MS + 5, "z": WM_MS - 1}))
+    rows = _advance_bucket(fn, st, keyed, ET)
+    assert sorted(fn.calls, key=str) == sorted(
+        [("a", 1, False), ("b", 2, False), (None, 1, False), ("z", 0, True)],
+        key=str,
+    )
+    assert sorted(rows, key=str) == sorted(
+        [("a", 1), ("b", 2), ("z", 0)], key=str
+    )
+    assert _tmo_of(st) == {"a": WM_MS + 1, "b": -1, "z": -1}
+
+
+def test_empty_chunks_give_no_keys():
+    empty = pd.DataFrame(columns=["user_id", "ts", "event_id", "event_type"])
+    assert _bucket_events([empty], "user_id", "ts", "event_id", "event_type") == []
+
+
+def test_idle_timeout_must_be_positive():
+    for bad in (0, -5):
+        with pytest.raises(ValueError, match="idle_timeout_ms must be a positive"):
+            match_sequence_stream(None, ["A", "B"], idle_timeout_ms=bad)
