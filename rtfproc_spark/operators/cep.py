@@ -31,8 +31,10 @@ operators.skew if a key is truly degenerate.
 from __future__ import annotations
 
 import re
+import struct
 from dataclasses import dataclass, replace as _dc_replace
 from functools import reduce
+from itertools import starmap
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -56,7 +58,7 @@ class CountBetween:
     body is every qualifying event in the open interval (greedy — the
     count constraint already fixes the membership), so binding adds only
     min/max aggregates to the batch plan; the stream twin records the hop
-    list per counter in its state codec (v3).
+    list per counter in its state.
 
     ``bind="all"`` additionally emits ``<name>_ids`` — EVERY loop hop's id
     in (ts, id) order (the per-row ``B.*`` measures surface; an empty
@@ -201,7 +203,7 @@ class CrossPred:
     batch-only (``pred`` is a JVM Column); the stream twin is
     :func:`match_sequence_stream`'s ``cross_conds=`` — serializable
     ``(ev_col, cmp, ref_step, ref_col)`` comparisons whose captured
-    values ride CEP state (codec v6). A referenced step
+    values ride CEP state. A referenced step
     must be a required single-row step bound BEFORE this one; loop
     bodies and optional steps (and their closers) cannot be CrossPred.
     Physically: the capture rides the earlier step's existing
@@ -452,7 +454,10 @@ def match_sequence(
     ``steps`` are boolean Column predicates over ``df``'s rows, e.g.
     ``[F.col("event_type") == "view", F.col("event_type") == "click"]``.
     ``id_col`` must be unique per row — it is the deterministic tiebreak
-    for simultaneous events and the anchor identity in the output.
+    for simultaneous events and the anchor identity in the output. Rows
+    with a null ts or id are dropped up front, and a row with a null key
+    never matches (every step after the anchor joins on ``key == key``);
+    :func:`match_sequence_stream` drops the same rows.
 
     A step may instead be a LIST of predicates — alternation, the
     ``A (B|C) D`` pattern: the step matches the earliest event satisfying
@@ -1809,7 +1814,7 @@ def match_sequence_sessionized(
 
 
 # --- compact binary state codec (stream CEP) --------------------------------
-# One partial: [nxt, limit, prev, hops, poison, pending, counters]
+# One partial: [nxt, limit, prev, hops, poison, pending, counters, *slots]
 #   nxt       0-based index of the next unmatched step
 #   limit     anchor_ts + within, epoch-nanos
 #   prev      ts of the last matched step, epoch-nanos
@@ -1819,18 +1824,43 @@ def match_sequence_sessionized(
 #   counters  per CountBetween spec:
 #             [n, last_ts|None, n_at_last, frozen, chops]
 #             chops = the loop's matched [ts, id] hops, kept ONLY for
-#             bind=True specs (empty otherwise, so non-binding state stays
-#             fixed-width)
-# Fixed-width little-endian ints — ~1.6x smaller than the JSON string this
-# replaces (8-byte ints vs 19-digit decimal ns timestamps + brackets), with
-# no string parse on the hot path (state-store bytes are the scaling
-# currency of a continuous CEP job); exact round-trip is pinned by tests,
-# as is the size drop. Version history: v2 = pair hops, fixed counters;
-# v3 (current) = triple hops (alternation branch byte) + per-counter hop
-# lists (binding loops). decode_state reads BOTH — a v2 checkpoint resumes
-# under the v3 code (branches read as 0, counter hop lists empty).
+#             bind=True specs (empty otherwise)
+#   slots     the pattern's trailing slots, the same number on every
+#             partial: none; loops (one Kleene loop slot per LoopStep, in
+#             the counter shape); or loops + caps (per capture step of a
+#             cross_conds pattern, the captured payload doubles, NaN for
+#             NULL, or None while the step is unbound)
+# Fixed-width little-endian ints — ~1.6x smaller than JSON (8-byte ints vs
+# 19-digit decimal ns timestamps + brackets), with no string parse on the
+# hot path (state-store bytes are the scaling currency of a continuous CEP
+# job); exact round-trip and the size drop are pinned by tests.
+#
+# A key's partials blob opens with a header: the layout byte, the slot
+# count, the last emitted match end, the session cursor and the partial
+# count. The layout byte is the one fence against state of older builds:
+# no older partials blob starts with it (their version bytes were 2-6, and
+# the JSON format began with '[' or '{'), and every stored key has a
+# partials blob, decoded before its buffer. The buffer needs no layout byte
+# of its own; it records its payload width, checked against the pattern.
 
 _I64_NONE = -(1 << 63)
+_LAYOUT = 0xCE
+_HEAD = struct.Struct("<BBqqqIH")  # layout, slots, last_end, sess, partials
+_PART = struct.Struct("<BqqqqqBH")  # nxt, limit, prev, poison, pending, hops
+_TIB = struct.Struct("<qqB")  # a hop [ts, id, branch]; a buffered event
+_CTR = struct.Struct("<IqIBH")  # n, last_ts, n_at_last, frozen, hops
+_PAIR = struct.Struct("<qq")
+_NO_HOP = (_I64_NONE, _I64_NONE, 0)
+
+
+def _fresh_checkpoint(reason: str) -> ValueError:
+    """The error for stream CEP state that this build cannot resume."""
+    return ValueError(
+        f"CEP state: {reason} — fresh checkpoint needed. Automatic migration "
+        "is not supported: restart the streaming query from a FRESH "
+        "checkpoint location (matches already emitted to the sink are "
+        "preserved by the idempotent sink's key-based merge)."
+    )
 
 
 def _pk_ts(v):
@@ -1841,271 +1871,138 @@ def _un_ts(v):
     return None if v == _I64_NONE else v
 
 
-def encode_partials(
-    partials: list,
-    last_end: list | None = None,
-    sess: list | None = None,
-    cross_caps: bool = False,
-) -> bytes:
-    """v4 header carries session-gap mode's cursor ``[last_event_ts_ns,
-    session_ordinal]``; v5 (emitted only when a partial carries Kleene
-    LOOP slots — an 8th element) appends a per-partial loop-slot section
-    in the counter wire shape. Loop-free patterns keep producing v4
-    blobs, so running pre-loop checkpoints stay byte-compatible both
-    ways. v6 (``cross_caps=True`` — the pattern carries cross-variable
-    DEFINE references) fixes the partial layout to ``[*fixed7, loops,
-    caps]`` (loops possibly empty) and appends a per-partial CAPS
-    section: for each capture step, the payload values (doubles;
-    NULL -> NaN) captured when that step bound, or an unbound flag.
-    Cross-free patterns never emit v6, so their checkpoints stay
-    byte-compatible."""
-    import struct as s
+def _un_hop(vals):
+    return None if vals[0] == _I64_NONE else list(vals)
 
-    has_loops = cross_caps or any(len(p) > 7 for p in partials)
-    ver = 6 if cross_caps else (5 if has_loops else 4)
+
+def _pack_counters(out: list, counters: list) -> None:
+    out.append(bytes((len(counters),)))
+    for n, last, nal, frozen, chops in counters:
+        out.append(_CTR.pack(n, _pk_ts(last), nal, frozen, len(chops)))
+        out.extend(starmap(_PAIR.pack, chops))
+
+
+def _unpack_counters(blob: bytes, off: int) -> tuple[list, int]:
+    n_ctr, off = blob[off], off + 1
+    counters = []
+    for _ in range(n_ctr):
+        n, last, nal, frozen, nh = _CTR.unpack_from(blob, off)
+        off += _CTR.size
+        chops = [list(_PAIR.unpack_from(blob, off + 16 * j)) for j in range(nh)]
+        off += 16 * nh
+        counters.append([n, _un_ts(last), nal, frozen, chops])
+    return counters, off
+
+
+def encode_partials(
+    partials: list, last_end: list | None = None, sess: list | None = None
+) -> bytes:
+    """One key's partials blob. ``last_end`` is the (ts, id) resume point
+    of the last emitted match (``after_match`` strategies other than
+    ``skip_to_next``), ``sess`` session-gap mode's cursor
+    ``[last_event_ts_ns, session_ordinal]``."""
+    slots = len(partials[0]) - 7 if partials else 0
     le = last_end or (_I64_NONE, _I64_NONE)
     sb = sess or (_I64_NONE, 0)
-    out = [
-        s.pack("<BqqqI", ver, le[0], le[1], sb[0], sb[1]),
-        s.pack("<H", len(partials)),
-    ]
+    out = [_HEAD.pack(_LAYOUT, slots, *le, *sb, len(partials))]
     for p in partials:
         nxt, limit, prev, hops, poison, pending, counters = p[:7]
-        out.append(s.pack("<Bqqq", nxt, limit, prev, _pk_ts(poison)))
-        pb = pending or (_I64_NONE, _I64_NONE, 0)
-        out.append(s.pack("<qqB", pb[0], pb[1], pb[2]))
-        out.append(s.pack("<H", len(hops)))
+        out.append(_PART.pack(nxt, limit, prev, _pk_ts(poison),
+                              *(pending or _NO_HOP), len(hops)))
         for h in hops:
-            hb = h or (_I64_NONE, _I64_NONE, 0)
-            out.append(s.pack("<qqB", hb[0], hb[1], hb[2]))
-        out.append(s.pack("<B", len(counters)))
-        for n, last, nal, frozen, chops in counters:
-            out.append(s.pack("<IqIB", n, _pk_ts(last), nal, frozen))
-            out.append(s.pack("<H", len(chops)))
-            for ct, ci in chops:
-                out.append(s.pack("<qq", ct, ci))
-        if has_loops:
-            loops = p[7] if len(p) > 7 else []
-            out.append(s.pack("<B", len(loops)))
-            for n, last, nal, frozen, lhops in loops:
-                out.append(s.pack("<IqIB", n, _pk_ts(last), nal, frozen))
-                out.append(s.pack("<H", len(lhops)))
-                for lt, li in lhops:
-                    out.append(s.pack("<qq", lt, li))
-        if cross_caps:
-            caps = p[8]
-            out.append(s.pack("<B", len(caps)))
-            for slot in caps:
-                if slot is None:
-                    out.append(s.pack("<B", 0))
-                else:
-                    out.append(s.pack("<BH", 1, len(slot)))
-                    out.append(
-                        s.pack(
-                            f"<{len(slot)}d",
-                            *(
-                                float("nan") if v is None else float(v)
-                                for v in slot
-                            ),
-                        )
-                    )
+            out.append(_TIB.pack(*(h or _NO_HOP)))
+        _pack_counters(out, counters)
+        if slots:
+            _pack_counters(out, p[7])
+        if slots > 1:
+            out.append(bytes((len(p[8]),)))
+            for cap in p[8]:
+                out.append(
+                    b"\x00" if cap is None
+                    else struct.pack(f"<BH{len(cap)}d", 1, len(cap), *cap)
+                )
     return b"".join(out)
-
-
-def decode_partials(blob: bytes | None) -> list:
-    return decode_state(blob)[0]
 
 
 def decode_state(blob: bytes | None) -> tuple[list, list | None, list | None]:
-    """-> (partials, last_emitted_match_end or None, sess or None) where
-    ``sess = [last_event_ts_ns, session_ordinal]``. The end marker backs
-    the ``after_match="skip_past_last"`` strategy across micro-batches;
-    ``sess`` is session-gap mode's cursor (None outside that mode and for
-    pre-v4 checkpoints)."""
-    import struct as s
-
+    """-> (partials, last_end or None, sess or None), as passed to
+    :func:`encode_partials`."""
     if not blob:
         return [], None, None
-    if blob[0] in (0x5B, 0x7B):  # '[' / '{' — the pre-binary JSON format
-        raise ValueError(
-            "CEP state blob is in the legacy JSON format (pre-binary-codec "
-            "checkpoint). Automatic migration is not supported: restart the "
-            "streaming query from a FRESH checkpoint location (matches "
-            "already emitted to the sink are preserved by the idempotent "
-            "sink's key-based merge)."
+    if blob[0] != _LAYOUT:
+        raise _fresh_checkpoint(
+            f"the partials blob starts with byte {blob[0]}, not this "
+            f"build's layout byte {_LAYOUT} (an older build wrote it)"
         )
-    ver, let, lei = s.unpack_from("<Bqq", blob, 0)
-    if ver not in (2, 3, 4, 5, 6):
-        raise ValueError(f"unknown CEP state version {ver}")
-    hop_fmt, hop_w = ("<qqB", 17) if ver >= 3 else ("<qq", 16)
-
-    def _un_hop(vals):
-        if vals[0] == _I64_NONE:
-            return None
-        return list(vals) if ver >= 3 else [*vals, 0]
-
-    last_end = None if let == _I64_NONE else [let, lei]
-    last_sess = None
-    off = 17
-    if ver >= 4:
-        ls, so = s.unpack_from("<qI", blob, off)
-        off += 12
-        last_sess = None if ls == _I64_NONE else [ls, so]
-    (np_,) = s.unpack_from("<H", blob, off)
-    off += 2
+    _, slots, let, lei, ls, so, n = _HEAD.unpack_from(blob, 0)
+    off = _HEAD.size
     partials = []
-    for _ in range(np_):
-        nxt, limit, prev, poison = s.unpack_from("<Bqqq", blob, off)
-        off += 25
-        pending = _un_hop(s.unpack_from(hop_fmt, blob, off))
-        off += hop_w
-        (nh,) = s.unpack_from("<H", blob, off)
-        off += 2
-        hops = []
-        for _ in range(nh):
-            hops.append(_un_hop(s.unpack_from(hop_fmt, blob, off)))
-            off += hop_w
-        (nc,) = s.unpack_from("<B", blob, off)
-        off += 1
-        counters = []
-        for _ in range(nc):
-            n, last, nal, frozen = s.unpack_from("<IqIB", blob, off)
-            off += 17
-            chops = []
-            if ver >= 3:
-                (nch,) = s.unpack_from("<H", blob, off)
-                off += 2
-                for _ in range(nch):
-                    ct, ci = s.unpack_from("<qq", blob, off)
-                    off += 16
-                    chops.append([ct, ci])
-            counters.append([n, _un_ts(last), nal, frozen, chops])
-        partial = [nxt, limit, prev, hops, _un_ts(poison), pending, counters]
-        if ver >= 5:
-            (nl,) = s.unpack_from("<B", blob, off)
-            off += 1
-            loops = []
-            for _ in range(nl):
-                n, last, nal, frozen = s.unpack_from("<IqIB", blob, off)
-                off += 17
-                (nlh,) = s.unpack_from("<H", blob, off)
-                off += 2
-                lhops = []
-                for _ in range(nlh):
-                    lt, li = s.unpack_from("<qq", blob, off)
-                    off += 16
-                    lhops.append([lt, li])
-                loops.append([n, _un_ts(last), nal, frozen, lhops])
-            partial.append(loops)
-        if ver >= 6:
-            (ncap,) = s.unpack_from("<B", blob, off)
-            off += 1
-            caps = []
-            for _ in range(ncap):
-                (flag,) = s.unpack_from("<B", blob, off)
-                off += 1
-                if not flag:
-                    caps.append(None)
-                    continue
-                (w,) = s.unpack_from("<H", blob, off)
-                off += 2
-                caps.append(list(s.unpack_from(f"<{w}d", blob, off)))
-                off += 8 * w
-            partial.append(caps)
-        partials.append(partial)
-    return partials, last_end, last_sess
-
-
-def encode_buffer(events: list) -> bytes:
-    """Out-of-order buffer: [(ts_ns, id, vocab_idx)] sorted by (ts, id)."""
-    import struct as s
-
-    out = [s.pack("<I", len(events))]
-    for t, i, v in events:
-        out.append(s.pack("<qqB", t, i, v))
-    return b"".join(out)
-
-
-def decode_buffer(blob: bytes | None) -> list:
-    import struct as s
-
-    if not blob:
-        return []
-    if blob[:4] == _NAV_MAGIC:
-        raise ValueError(
-            "this checkpoint's buffer carries navigation payload (a nav "
-            "DEFINE ran here) — resuming it under a nav-free pattern "
-            "needs a fresh checkpoint directory"
-        )
-    (n,) = s.unpack_from("<I", blob, 0)
-    off = 4
-    out = []
     for _ in range(n):
-        t, i, v = s.unpack_from("<qqB", blob, off)
-        off += 17
-        out.append((t, i, v))
-    return out
+        nxt, limit, prev, poison, *pending, nh = _PART.unpack_from(blob, off)
+        off += _PART.size
+        hops = [_un_hop(_TIB.unpack_from(blob, off + 17 * j)) for j in range(nh)]
+        counters, off = _unpack_counters(blob, off + 17 * nh)
+        p = [nxt, limit, prev, hops, _un_ts(poison), _un_hop(pending), counters]
+        if slots:
+            loops, off = _unpack_counters(blob, off)
+            p.append(loops)
+        if slots > 1:
+            caps = []
+            ncap, off = blob[off], off + 1
+            for _ in range(ncap):
+                if not blob[off]:
+                    caps.append(None)
+                    off += 1
+                    continue
+                (w,) = struct.unpack_from("<H", blob, off + 1)
+                caps.append(list(struct.unpack_from(f"<{w}d", blob, off + 3)))
+                off += 3 + 8 * w
+            p.append(caps)
+        partials.append(p)
+    return (
+        partials,
+        None if let == _I64_NONE else [let, lei],
+        None if ls == _I64_NONE else [ls, so],
+    )
 
 
-# nav-mode buffer blob: magic + version so a legacy blob (raw <I count>
-# header) is unambiguous — 0xFFFFFFFF as a count would imply a ~70 GB
-# legacy blob, which the length equation rejects
-_NAV_MAGIC = b"\xff\xff\xff\xff"
-
-
-def encode_buffer_nav(events: list, tail: list, m: int) -> bytes:
-    """Nav-mode out-of-order buffer: each buffered event carries the ``m``
-    navigation column values (doubles; NULL -> NaN, every comparison with
-    which is False — exactly SQL null semantics for the lowered
-    predicate), plus the processed-history TAIL (the last max-offset
-    events' nav values, needed so PREV can cross a micro-batch
-    boundary)."""
-    import math
-    import struct as s
-
-    def _d(x):
-        return float("nan") if x is None else float(x)
-
-    out = [_NAV_MAGIC, s.pack("<BB", 1, m), s.pack("<B", len(tail))]
-    for vals in tail:
-        out.append(s.pack(f"<{m}d", *(_d(v) for v in vals)))
-    out.append(s.pack("<I", len(events)))
-    for t, i, v, vals in events:
-        out.append(s.pack(f"<qqB{m}d", t, i, v, *(_d(x) for x in vals)))
+def encode_buffer(events: list, tail: list, m: int) -> bytes:
+    """One key's out-of-order buffer: events ``(ts_ns, id, vocab_idx)`` in
+    (ts, id) order, each followed by its ``m = len(aux_cols)`` payload
+    doubles as a list when ``m > 0`` (NaN for NULL, which fails every
+    comparison: SQL null semantics), plus the processed-history TAIL, the
+    last max-offset events' values, so PREV crosses micro-batch
+    boundaries. The blob records ``m``: a pattern with another payload
+    width cannot resume it."""
+    out = [struct.pack("<BB", m, len(tail))]
+    if not m:
+        out.extend(starmap(_TIB.pack, events))
+        return b"".join(out)
+    row, ev = struct.Struct(f"<{m}d"), struct.Struct(f"<qqB{m}d")
+    out.extend(starmap(row.pack, tail))
+    out.extend(ev.pack(t, i, v, *vals) for t, i, v, vals in events)
     return b"".join(out)
 
 
-def decode_buffer_nav(blob: bytes | None, m: int) -> tuple[list, list]:
-    import struct as s
-
+def decode_buffer(blob: bytes | None, m: int) -> tuple[list, list]:
+    """-> (events, tail), as passed to :func:`encode_buffer`."""
     if not blob:
         return [], []
-    if blob[:4] != _NAV_MAGIC:
-        raise ValueError(
-            "this checkpoint's buffer has no navigation payload — a "
-            "PREV()-bearing DEFINE cannot resume it; start from a fresh "
-            "checkpoint directory"
+    m_enc, nt = blob[0], blob[1]
+    if m_enc != m:
+        raise _fresh_checkpoint(
+            f"the buffer blob with {m_enc} nav columns does not match the "
+            f"running pattern ({m})"
         )
-    ver, m_enc = s.unpack_from("<BB", blob, 4)
-    if ver != 1 or m_enc != m:
-        raise ValueError(
-            f"nav buffer blob v{ver} with {m_enc} nav columns does not "
-            f"match the running pattern ({m}) — fresh checkpoint needed"
-        )
-    (tn,) = s.unpack_from("<B", blob, 6)
-    off = 7
-    tail = []
-    for _ in range(tn):
-        tail.append(list(s.unpack_from(f"<{m}d", blob, off)))
-        off += 8 * m
-    (n,) = s.unpack_from("<I", blob, off)
-    off += 4
-    out = []
-    for _ in range(n):
-        vals = s.unpack_from(f"<qqB{m}d", blob, off)
-        off += 17 + 8 * m
-        out.append((vals[0], vals[1], vals[2], list(vals[3:])))
-    return out, tail
+    tail = [list(struct.unpack_from(f"<{m}d", blob, 2 + 8 * m * j))
+            for j in range(nt)]
+    body = memoryview(blob)[2 + 8 * m * nt:]
+    if not m:
+        return list(_TIB.iter_unpack(body)), tail
+    return [
+        (e[0], e[1], e[2], list(e[3:]))
+        for e in struct.iter_unpack(f"<qqB{m}d", body)
+    ], tail
 
 
 # --- key-bucketed keyed state (stream CEP) ----------------------------------
@@ -2113,8 +2010,7 @@ def decode_buffer_nav(blob: bytes | None, m: int) -> tuple[list, list]:
 # the key: one applyInPandasWithState call (and one state row) per bucket
 # amortises Spark's per-group framing and the per-call pandas work over all
 # of the bucket's keys — Flink's key groups. Each bucket row holds its keys'
-# per-key (partials, buffer) blobs and timeouts side by side, so the per-key
-# codecs above are unchanged.
+# per-key (partials, buffer) blobs and timeouts side by side.
 
 STATE_BUCKETS = 1024
 BUCKET_COL = "_cep_bucket"
@@ -2122,12 +2018,8 @@ _NO_TIMEOUT = -1  # GroupState.NO_TIMESTAMP
 
 
 def _bucket_of(key_col: str) -> Column:
-    """The key's state bucket. Null keys get bucket -1 of their own: an
-    integral key column with a null in it would reach pandas as float64
-    and lose the exact value of keys beyond 2**53."""
-    return F.when(F.col(key_col).isNull(), F.lit(-1)).otherwise(
-        F.pmod(F.xxhash64(key_col), F.lit(STATE_BUCKETS))
-    )
+    """The key's state bucket; null keys are filtered out before this."""
+    return F.pmod(F.xxhash64(key_col), F.lit(STATE_BUCKETS))
 
 
 class _KeyState:
@@ -2188,7 +2080,8 @@ def _bucket_events(
     doubles (NULL -> NaN) when there are any — in (ts, id) order. One
     numpy sort for the whole bucket; rows with a null ts or id are dropped
     (null comparisons are false, so they can neither anchor nor advance in
-    the batch algebra). A null key is a key of its own (``None``)."""
+    the batch algebra). Keys are non-null: the stream drops null keys
+    before the shuffle."""
     import numpy as np
     import pandas as pd
 
@@ -2222,10 +2115,7 @@ def _bucket_events(
     events = list(zip(*cols))
     keys = uniques.tolist()
     cuts = [0, *(np.flatnonzero(codes[1:] != codes[:-1]) + 1).tolist(), len(codes)]
-    return [
-        (keys[codes[a]] if codes[a] >= 0 else None, events[a:b])
-        for a, b in zip(cuts, cuts[1:])
-    ]
+    return [(keys[codes[a]], events[a:b]) for a, b in zip(cuts, cuts[1:])]
 
 
 def _advance_bucket(key_fn, state: GroupState, keyed: list, timeout_conf: str) -> list:
@@ -2244,13 +2134,10 @@ def _advance_bucket(key_fn, state: GroupState, keyed: list, timeout_conf: str) -
     if state.exists:
         keys, partials, buffers, tmos, n_buckets = state.get
         if n_buckets != STATE_BUCKETS:
-            raise ValueError(
-                f"CEP state was written with {n_buckets} key buckets, this "
-                f"build uses {STATE_BUCKETS}, so keys would be looked up in "
-                "the wrong bucket. Automatic migration is not supported: "
-                "restart the streaming query from a FRESH checkpoint "
-                "location (matches already emitted to the sink are "
-                "preserved by the idempotent sink's key-based merge)."
+            raise _fresh_checkpoint(
+                f"it was written with {n_buckets} key buckets, this build "
+                f"uses {STATE_BUCKETS}, so keys would be looked up in the "
+                "wrong bucket"
             )
     else:
         keys, partials, buffers, tmos = (), (), (), ()
@@ -2334,6 +2221,8 @@ def match_sequence_stream(
     """Streaming twin of :func:`match_sequence` via a per-key CEP state
     machine (``applyInPandasWithState``): the set of in-flight partial
     matches is the state; completed sequences are emitted as they close.
+    Both twins drop the same rows: a row with a null key, ts or id never
+    matches (the stream filters null keys out before its shuffle).
 
     ``nav_conds`` (round 8) enables PREV physical navigation in stream
     DEFINEs — the ticker pattern ``D AS value < PREV(value)`` — in
@@ -2345,9 +2234,10 @@ def match_sequence_stream(
     (use ``"*"`` as the step value for a type-free nav variable).
     Buffered events carry the referenced column values as doubles
     (NULL -> NaN, every comparison False), the last max-offset processed
-    values persist in state so PREV crosses micro-batch boundaries, and
-    the buffer blob switches to a nav format (legacy checkpoints raise a
-    targeted fresh-checkpoint error in either direction). Requires
+    values persist in state so PREV crosses micro-batch boundaries; the
+    buffer blob records how many values each event carries, and a
+    checkpoint written for another count raises the fresh-checkpoint
+    error. Requires
     ``ordered=False``; not composable with ``session_gap``; NEXT has no
     append-mode expression and stays batch-only.
 
@@ -2358,15 +2248,15 @@ def match_sequence_stream(
     ref_col), ...]}``, each condition ``candidate.ev_col <cmp> (the
     ref_col value of the event that bound step j)``, conjoined with step
     p's literal vocabulary. The referenced values are CAPTURED on the
-    partial when step j binds and travel in CEP state (codec v6 —
-    cross-free patterns keep emitting v5/v4, and resuming a pre-v6
-    checkpoint under a cross pattern, or vice versa, raises a targeted
-    fresh-checkpoint error). Same per-candidate semantics as batch: a
+    partial when step j binds and travel in CEP state as capture slots
+    (resuming a cross-free pattern's checkpoint under a cross pattern,
+    or vice versa, raises the fresh-checkpoint error). Same
+    per-candidate semantics as batch: a
     failing candidate is SKIPPED and the next event tried. Values are
     numeric doubles with SQL NULL semantics (NULL/NaN fails). Works in
     BOTH delivery modes (ordered reads payload transiently from the
     micro-batch; buffered carries it through the out-of-order buffer on
-    the shared nav-format value vector). Restrictions mirror the batch
+    the shared payload value vector). Restrictions mirror the batch
     CrossPred: the conditioned step must be a required non-loop-body
     step (a loop CLOSER is fine), the referenced step a required
     non-loop step bound strictly before it.
@@ -2412,8 +2302,8 @@ def match_sequence_stream(
     output adds ``branch_k`` (the 0-based tuple position that matched).
     A step value may also be a :class:`LoopStep` (with ``value=`` set) —
     the Kleene ``A B+ C`` pattern step, mirroring the batch steps list:
-    loop hops accumulate in per-partial state (v5 codec section; loop-free
-    patterns keep emitting v4 blobs) and the same greedy closer-priority /
+    loop hops accumulate in per-partial loop slots and the same greedy
+    closer-priority /
     same-tick-backout semantics apply, emitting ``n_<name>`` plus the
     first/last (and ``bind="all"`` id-array) measures. A FINAL-position
     LoopStep (``A B+``, no closer) emits when the WATERMARK passes the
@@ -2430,9 +2320,12 @@ def match_sequence_stream(
     ``optional_steps`` (same no-lookahead greedy rule as batch: the
     optional is taken iff its earliest candidate precedes the closer's)
     and ``counts`` (:class:`CountBetween` with ``value=`` set; ``bind=True``
-    additionally emits the loop's first/last hop columns, recorded in the
-    v3 state codec) mirror the batch parameters by literal value. State is a compact fixed-width
-    binary column (see ``encode_partials``); partials expire as soon as
+    additionally emits the loop's first/last hop columns, recorded in
+    state) mirror the batch parameters by literal value. State is a
+    compact fixed-width binary column with one layout (see
+    ``encode_partials``; a checkpoint of an older layout, or of a pattern
+    with other loop or capture slots, raises one targeted
+    fresh-checkpoint ``ValueError``); partials expire as soon as
     processing passes their anchor window, so state per key is bounded by
     anchors-per-window (+ the not-yet-finalized buffer in
     ``ordered=False`` mode, bounded by events within the watermark
@@ -2449,7 +2342,7 @@ def match_sequence_stream(
     The output gains a ``session_id`` column (the per-key session ordinal,
     matching the batch labeler). Pass ``within="3650 days"`` to reproduce
     the batch twin's inert default horizon. State additionally holds the
-    session keepalive cursor + ordinal (v4 codec header); in-flight
+    session keepalive cursor + ordinal (in the state header); in-flight
     partials die at every session boundary and when the WATERMARK passes
     the open session's gap deadline, so state per key is bounded by
     anchors-per-session + the watermark buffer. Cost relative to plain
@@ -2459,9 +2352,9 @@ def match_sequence_stream(
 
     Scale note: keyed state is KEY-BUCKETED. The operator groups by
     ``_cep_bucket = pmod(xxhash64(key_col), STATE_BUCKETS)`` (1024 hash
-    buckets, Flink's key groups, plus bucket -1 for a null key), not by
-    the key, so Spark's per-group framing and the per-call pandas work are
-    paid once per bucket, not once per key: each call sorts the bucket's
+    buckets, Flink's key groups), not by the key, so Spark's per-group
+    framing and the per-call pandas work are paid once per bucket, not
+    once per key: each call sorts the bucket's
     rows once with numpy, splits them per key, runs the per-key machine
     for every key with data and for every key whose own timeout fell
     below Spark's threshold (the watermark, or the batch processing time
@@ -2518,8 +2411,8 @@ def match_sequence_stream(
         # ANCHOR-position loop — same desugar as the batch twin: the
         # first hop anchors a plain step, the rest ride the middle/final
         # loop machinery, and the projection folds the anchor back into
-        # the measures.  State codec and checkpoints are untouched (the
-        # inner call sees an ordinary loop-bearing pattern).
+        # the measures.  The state layout is the usual one (the inner
+        # call sees an ordinary loop-bearing pattern).
         sp0 = step_values[0]
         if sp0.value is None:
             raise ValueError(
@@ -2750,7 +2643,7 @@ def match_sequence_stream(
     # satisfy event.<ev_col> <cmp> <value of ref_col captured when step j
     # bound> — MATCH_RECOGNIZE's last-matched-row running semantics
     # (`P AS value > V.value`), the stream twin of the batch CrossPred.
-    # Captured values live in the partial (codec v6); comparisons are
+    # Captured values live in the partial's capture slots; comparisons are
     # numeric-double with SQL NULL semantics (NaN fails), like nav.
     cross = {int(p): [tuple(c) for c in cs]
              for p, cs in (cross_conds or {}).items()}
@@ -3021,49 +2914,37 @@ def match_sequence_stream(
 
     loop_slot = {j: pos for pos, j in enumerate(sorted(loop0))}
 
-    def _fresh_loops():
-        return [[0, None, 0, 0, []] for _ in loop0]
+    n_slots = 2 if cross else 1 if loop0 else 0
+    slot_kinds = (
+        "no loop slots and no cross-variable capture slots",
+        "loop slots but no cross-variable capture slots",
+        "loop and cross-variable capture slots",
+    )
 
-    def _pad_loops(partials):
-        """Normalize decoded partials to carry loop slots (a pre-v5
-        checkpoint of a loop-free pattern resumed under a loop-bearing one
-        cannot exist, but padding keeps the invariant trivially true)."""
-        if not loop0:
-            return partials
-        return [
-            p if len(p) > 7 and len(p[7]) == len(loop0)
-            else [*p[:7], _fresh_loops(), *p[8:]]
-            for p in partials
-        ]
-
-    def _chk_caps(partials):
-        """Cross-variable capture slots are config-bound state: a
-        checkpoint written without them (pre-v6 / cross-free pattern)
-        cannot resume under a cross_conds-bearing pattern (mid-flight
-        partials would carry no captured values), and vice versa —
-        targeted fresh-checkpoint errors either way, like the nav
-        buffer's magic fence."""
+    def _check_shape(partials):
+        """Loop and capture slots are pattern-bound state: a checkpoint
+        whose partials carry another pattern's slots cannot resume. One
+        pattern wrote every partial of a blob, so the first one tells."""
         if not partials:
-            return partials
-        has = len(partials[0]) >= 9
-        if bool(cross) != has:
-            raise ValueError(
-                "this checkpoint's CEP state "
-                + ("has no cross-variable capture slots — a cross_conds-"
-                   "bearing pattern cannot resume it"
-                   if cross else
-                   "carries cross-variable capture slots (a cross_conds "
-                   "pattern ran here) — a cross-free pattern cannot "
-                   "resume it")
-                + "; start from a fresh checkpoint directory"
+            return
+        p = partials[0]
+        got = len(p) - 7
+        if got != n_slots:
+            raise _fresh_checkpoint(
+                f"its partials carry {slot_kinds[got]}, the running pattern "
+                f"needs {slot_kinds[n_slots]}"
             )
-        if cross and len(partials[0][8]) != len(cap_steps):
-            raise ValueError(
-                "this checkpoint's cross-variable capture slots do not "
-                "match the running pattern's capture steps — fresh "
-                "checkpoint needed"
+        if got and len(p[7]) != len(loop0):
+            raise _fresh_checkpoint(
+                f"its partials carry {len(p[7])} loop slots, the running "
+                f"pattern has {len(loop0)} loop steps"
             )
-        return partials
+        if got > 1 and len(p[8]) != len(cap_steps):
+            raise _fresh_checkpoint(
+                f"its partials carry {len(p[8])} cross-variable capture "
+                f"slots, the running pattern has {len(cap_steps)} capture "
+                "steps"
+            )
 
     def _complete(p, t, rows, key_val, hops, sess_ord=None):
         """Emit if the poison/count constraints hold (called at final hop);
@@ -3367,7 +3248,8 @@ def match_sequence_stream(
                     [1, t + within_ns, t,
                      [[t, i, _bidx(0, typ)]], None, None,
                      [[0, None, 0, 0, []] for _ in sp],
-                     *([_fresh_loops()] if loop0 or cross else []),
+                     *([[[0, None, 0, 0, []] for _ in loop0]]
+                       if n_slots else []),
                      *([caps0] if cross else [])]
                 )
         return partials, last_end, sess
@@ -3397,7 +3279,7 @@ def match_sequence_stream(
         partials, last_end, _ = (
             decode_state(state.get[0]) if state.exists else ([], None, None)
         )
-        partials = _pad_loops(_chk_caps(partials))
+        _check_shape(partials)
         rows: list = []
         if cross or loc:
             # ordered mode carries the cross/local payload transiently
@@ -3407,10 +3289,7 @@ def match_sequence_stream(
             partials, events, rows, key_val, last_end
         )
         if partials:
-            state.update(
-                (encode_partials(partials, last_end,
-                                 cross_caps=bool(cross)), b"")
-            )
+            state.update((encode_partials(partials, last_end), b""))
             if idle_timeout_ms is not None:
                 state.setTimeoutDuration(idle_timeout_ms)
         elif state.exists:
@@ -3421,17 +3300,12 @@ def match_sequence_stream(
         return rows
 
     def _fn_buffered(key_val, events, state):
-        tail: list = []
         if state.exists:
             partials, last_end, sess = decode_state(state.get[0])
-            partials = _pad_loops(_chk_caps(partials))
-            if aux:
-                buffer, tail = decode_buffer_nav(state.get[1],
-                                                 len(aux_cols))
-            else:
-                buffer = decode_buffer(state.get[1])
+            _check_shape(partials)
+            buffer, tail = decode_buffer(state.get[1], len(aux_cols))
         else:
-            partials, buffer, last_end, sess = [], [], None, None
+            partials, buffer, tail, last_end, sess = [], [], [], None, None
         wm_ms = state.getCurrentWatermarkMs()
         wm_ns = wm_ms * 1_000_000
         if aux:
@@ -3545,10 +3419,8 @@ def match_sequence_stream(
         if partials or buffer or (gap_ns is not None and sess is not None) \
                 or (nav and tail):
             state.update(
-                (encode_partials(partials, last_end, sess,
-                                 cross_caps=bool(cross)),
-                 encode_buffer_nav(buffer, tail, len(aux_cols))
-                 if aux else encode_buffer(buffer))
+                (encode_partials(partials, last_end, sess),
+                 encode_buffer(buffer, tail, len(aux_cols)))
             )
             wake = None
             if buffer:
@@ -3586,6 +3458,8 @@ def match_sequence_stream(
         stream.withWatermark(time_col, watermark)
         # the matcher reads only these columns: do not shuffle the rest
         .select(*dict.fromkeys([key_col, time_col, id_col, type_col, *aux_cols]))
+        # a null key never matches in batch (every step joins on key == key)
+        .where(F.col(key_col).isNotNull())
         .withColumn(BUCKET_COL, _bucket_of(key_col))
         .groupBy(BUCKET_COL)
         .applyInPandasWithState(

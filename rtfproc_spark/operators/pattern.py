@@ -983,7 +983,7 @@ def _lower_stream_define(
     ``<colA> <cmp> <Var>.<colB>`` (either side; ``FIRST/LAST(<Var>.
     <colB>)`` sugar accepted for single-row priors, like batch) — the
     last-matched-row running reference (``P AS value > V.value``),
-    carried in CEP state via the v6 codec, plus row-local CONSTANT
+    carried in CEP state, plus row-local CONSTANT
     comparisons ``<col> <cmp> <number>`` (either side — ``value > 10``;
     nothing enters CEP state). A variable with ONLY nav/cross/local
     conjuncts lowers to the ``"*"`` wildcard vocabulary value.
@@ -1177,7 +1177,7 @@ def match_recognize_sql(
     :class:`~rtfproc_spark.operators.cep.CrossPred` evaluated PER
     CANDIDATE at the step's join (a failing candidate is skipped, not
     the match), and on a STREAM to the state machine's ``cross_conds=``
-    (captured values ride CEP state, codec v6) — numeric payload
+    (captured values ride CEP state) — numeric payload
     comparisons only there; the referenced variable must be a required
     non-loop step bound earlier, the referencing one a required non-loop
     step or loop closer.

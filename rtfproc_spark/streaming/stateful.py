@@ -101,6 +101,12 @@ def conversation_tracker(
     (continuous production jobs keep the default eviction)."""
     import functools
 
+    if idle_timeout_ms is not None and idle_timeout_ms <= 0:
+        raise ValueError(
+            f"idle_timeout_ms must be a positive number of milliseconds, "
+            f"got {idle_timeout_ms}"
+        )
+
     timeout_conf = (
         GroupStateTimeout.ProcessingTimeTimeout
         if idle_timeout_ms is not None

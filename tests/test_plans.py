@@ -490,7 +490,9 @@ def test_cep_union_matchers_default_plan(spark):
 
 def test_stream_cep_groups_by_key_bucket(spark, tmp_path):
     """The stream matcher's stateful operator groups on the hash bucket of
-    the key, not on the key: a fallback to one group per user fails here."""
+    the key, not on the key: a fallback to one group per user fails here.
+    Null keys are filtered out before the shuffle, as batch never matches
+    them."""
     from rtfproc_spark.operators.pattern import match_recognize_stream
 
     stream = spark.readStream.schema(
@@ -506,3 +508,5 @@ def test_stream_cep_groups_by_key_bucket(spark, tmp_path):
     grouping = re.match(r"[^\[]*\[([^\]]*)\]", node.group(0)).group(1)
     assert "_cep_bucket" in grouping and "user_id" not in grouping, node.group(0)
     assert "xxhash64(user_id" in p, p
+    below_exchange = p[p.index("Exchange hashpartitioning(_cep_bucket"):]
+    assert re.search(r"Filter .*isnotnull\(user_id", below_exchange), p

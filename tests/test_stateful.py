@@ -14,6 +14,13 @@ from rtfproc_spark.streaming.stateful import (
 pytestmark = pytest.mark.spark
 
 
+def test_tracker_idle_timeout_must_be_positive():
+    # raised before the stream is touched, so no Spark is needed
+    for bad in (0, -5):
+        with pytest.raises(ValueError, match="idle_timeout_ms must be a positive"):
+            conversation_tracker(None, idle_timeout_ms=bad)
+
+
 def test_tracker_stream_matches_batch_oracle(spark, tmp_path):
     src = str(tmp_path / "src")
     os.makedirs(src)

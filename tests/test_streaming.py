@@ -480,7 +480,7 @@ def test_cep_state_codec_roundtrip_and_size():
 
     from rtfproc_spark.operators.cep import (
         decode_buffer,
-        decode_partials,
+        decode_state,
         encode_buffer,
         encode_partials,
     )
@@ -501,59 +501,30 @@ def test_cep_state_codec_roundtrip_and_size():
          None, []],
     ]
     blob = encode_partials(partials)
-    assert decode_partials(blob) == partials
-    assert decode_partials(None) == [] and decode_partials(b"") == []
+    assert decode_state(blob)[0] == partials
+    assert decode_state(None)[0] == [] and decode_state(b"")[0] == []
     # skip_past_last end marker round-trips through the header
-    from rtfproc_spark.operators.cep import decode_state
-
     assert decode_state(encode_partials(partials, [t, 42])) == (
         partials, [t, 42], None
     )
     assert decode_state(encode_partials(partials))[1] is None
-    # v4 session cursor round-trips
+    # session cursor round-trips
     assert decode_state(encode_partials(partials, None, [t, 3]))[2] == [t, 3]
     as_json = json.dumps(partials).encode()
     assert len(blob) < 0.7 * len(as_json), (len(blob), len(as_json))
 
     buf = [(t, 5, 0), (t + 1, 6, 2), (t + 2, 7, 1)]
-    bblob = encode_buffer(buf)
-    assert decode_buffer(bblob) == buf
-    assert decode_buffer(None) == []
-
-
-def test_cep_state_codec_v2_checkpoint_migrates():
-    """A v2 blob (pair hops, fixed-width counters — the round-5 format)
-    decodes under the v3 code: branches read as 0, counter hop lists
-    empty, so a v2 checkpoint resumes without a fresh start."""
-    import struct as s
-
-    from rtfproc_spark.operators.cep import _I64_NONE, decode_state
-
-    t = 1_704_067_200_000_000_000
-    v2 = b"".join([
-        s.pack("<Bqq", 2, t, 42),           # header: ver, last_end
-        s.pack("<H", 1),                     # one partial
-        s.pack("<Bqqq", 2, t + 900, t + 60, _I64_NONE),
-        s.pack("<qq", _I64_NONE, _I64_NONE),  # no pending
-        s.pack("<H", 2),                     # two hops (one skipped)
-        s.pack("<qq", t, 11),
-        s.pack("<qq", _I64_NONE, _I64_NONE),
-        s.pack("<B", 1),                     # one counter
-        s.pack("<IqIB", 3, t + 45, 2, 0),
-    ])
-    partials, last_end, sess = decode_state(v2)
-    assert last_end == [t, 42] and sess is None
-    assert partials == [
-        [2, t + 900, t + 60, [[t, 11, 0], None], None, None,
-         [[3, t + 45, 2, 0, []]]]
-    ]
+    bblob = encode_buffer(buf, [], 0)
+    assert decode_buffer(bblob, 0) == (buf, [])
+    assert decode_buffer(None, 0) == ([], [])
 
 
 def test_match_sequence_stream_quantifiers_equals_batch(spark, tmp_path):
     """Streaming optional step (B?) + CountBetween quantifier must emit
     exactly the batch operator's rows — including the null ts/id columns of
     skipped optionals and the emitted count — across a real 4-micro-batch
-    replay."""
+    replay. Null-key rows that would form matches as one key match in
+    neither twin."""
     import random
     import time as _time
     from datetime import datetime, timedelta
@@ -580,7 +551,17 @@ def test_match_sequence_stream_quantifiers_equals_batch(spark, tmp_path):
         ),
         key=lambda r: (r[3], r[0]),
     )
+    # four complete view -> click -> purchase runs, all with a null key
+    rows = sorted(
+        rows + [
+            (1000 + j, None, typ, t0 + timedelta(seconds=1800 * f + j))
+            for f in range(4)
+            for j, typ in enumerate(["view", "click", "error", "purchase"])
+        ],
+        key=lambda r: (r[3], r[0]),
+    )
     pdf = pd.DataFrame(rows, columns=["event_id", "user_id", "event_type", "ts"])
+    pdf["user_id"] = pdf["user_id"].astype("Int64")
     pdf["ts"] = pdf["ts"].astype("datetime64[us]")
     src = tmp_path / "src"
     src.mkdir()
@@ -601,7 +582,8 @@ def test_match_sequence_stream_quantifiers_equals_batch(spark, tmp_path):
         name="err",
     )
     cols = ["user_id", "ts_1", "id_1", "ts_2", "id_2", "ts_3", "id_3", "n_err"]
-    batch_df = spark.createDataFrame(pdf)
+    batch_df = spark.read.parquet(str(src))
+    assert batch_df.where("user_id IS NULL").count() == 16
     want_all = {
         tuple(r)
         for r in match_sequence(
@@ -1020,9 +1002,8 @@ def test_loop_step_sessionized_stream_equals_batch(spark, tmp_path):
 
 def test_loop_step_validation_and_codec_v5(spark):
     """LoopStep constraint violations raise targeted errors on both
-    twins; the v5 state codec round-trips loop slots exactly while
-    loop-FREE patterns keep emitting byte-version-4 blobs (running
-    checkpoints stay compatible both ways)."""
+    twins; the state codec round-trips loop slots exactly, and its header
+    records one trailing slot for them (none for loop-FREE partials)."""
     import pytest
 
     from rtfproc_spark.operators.cep import (
@@ -1071,11 +1052,11 @@ def test_loop_step_validation_and_codec_v5(spark):
           [0, None, 0, 0, []]]],
     ]
     blob5 = encode_partials(with_loops)
-    assert blob5[0] == 5
+    assert blob5[1] == 1
     assert decode_state(blob5)[0] == with_loops
     no_loops = [[1, t + 900, t, [[t, 11, 0]], None, None, []]]
     blob4 = encode_partials(no_loops)
-    assert blob4[0] == 4
+    assert blob4[1] == 0
     assert decode_state(blob4)[0] == no_loops
 
 
@@ -1803,16 +1784,6 @@ def test_read_sink_map_column_analyzes(spark, tmp_path):
         picks.add(rows[1])
     # hashable column v still tiebreaks deterministically
     assert len(picks) == 1
-
-
-def test_decode_state_legacy_json_targeted_error():
-    import pytest as _pytest
-
-    from rtfproc_spark.operators.cep import decode_state
-
-    for legacy in (b"[]", b'{"partials": []}'):
-        with _pytest.raises(ValueError, match="legacy JSON"):
-            decode_state(legacy)
 
 
 def test_match_sequence_stream_alternation_binding_equals_batch(spark, tmp_path):
@@ -3806,26 +3777,25 @@ def test_stream_nav_codec_and_errors(spark):
     import pytest as _pytest
 
     from rtfproc_spark.operators.cep import (
-        decode_buffer, decode_buffer_nav, encode_buffer,
-        encode_buffer_nav, match_sequence_stream,
+        decode_buffer, encode_buffer, match_sequence_stream,
     )
     from rtfproc_spark.operators.pattern import match_recognize_sql
 
     # round-trip
     evs = [(10, 1, 0, [1.5, float("nan")]), (20, 2, 255, [2.0, 3.0])]
     tail = [[0.5, 1.0]]
-    blob = encode_buffer_nav(evs, tail, 2)
-    evs2, tail2 = decode_buffer_nav(blob, 2)
+    blob = encode_buffer(evs, tail, 2)
+    evs2, tail2 = decode_buffer(blob, 2)
     assert tail2 == tail and len(evs2) == 2
     assert evs2[0][:3] == (10, 1, 0) and evs2[0][3][0] == 1.5
     assert evs2[0][3][1] != evs2[0][3][1]  # NaN round-trips
     # fencing both directions
     with _pytest.raises(ValueError, match="fresh checkpoint"):
-        decode_buffer_nav(encode_buffer([(10, 1, 0)]), 2)
+        decode_buffer(encode_buffer([(10, 1, 0)], [], 0), 2)
     with _pytest.raises(ValueError, match="fresh checkpoint"):
-        decode_buffer(blob)
+        decode_buffer(blob, 0)
     with _pytest.raises(ValueError, match="nav columns does not match"):
-        decode_buffer_nav(blob, 3)
+        decode_buffer(blob, 3)
 
     stream = (
         spark.readStream.format("rate").option("rowsPerSecond", 1).load()
@@ -4113,14 +4083,14 @@ def test_stream_cross_codec_and_errors(spark, tmp_path):
         [1, t + 900_000_000_000, t, [[t, 14, 0]], None, None, [], [],
          [None, None]],
     ]
-    blob = encode_partials(partials, cross_caps=True)
+    blob = encode_partials(partials)
     back, _le, _sess = decode_state(blob)
     assert len(back) == 2 and back[1][8] == [None, None]
     assert back[0][8][1] is None and back[0][8][0][0] == 10.5
     assert math.isnan(back[0][8][0][1])  # NULL -> NaN round-trips
-    # cross-free encode of the same logical partials stays v5/v4
-    assert blob[0] == 6
-    assert encode_partials([p[:7] for p in partials])[0] == 4
+    # the header records two trailing slots, none for cross-free partials
+    assert blob[1] == 2
+    assert encode_partials([p[:7] for p in partials])[1] == 0
 
     stream = (
         spark.readStream.format("rate").option("rowsPerSecond", 1).load()
