@@ -156,11 +156,11 @@ class LoopStep:
     must start the match.  CountBetween indices keep referring to the
     pattern as written.
 
-    Constraints (raise): a loop cannot be followed
-    by another loop or an optional step, cannot itself be optional,
-    cannot combine with ``step_within``, ``max_n`` cannot undercut
-    ``min_n``, and :class:`CountBetween` cannot anchor on a loop
-    position.
+    Constraints (raise; ``_check_pattern`` runs them for both twins): a
+    loop cannot be followed by another loop or an optional step, cannot
+    itself be optional, cannot combine with ``step_within``, ``max_n``
+    cannot undercut ``min_n``, and :class:`CountBetween` cannot anchor on
+    a loop position.
 
     ``pred`` is the batch predicate — a single Column, or a list/tuple
     of Columns OR'd together (the loop-body alternation ``(B|C)+``,
@@ -268,83 +268,211 @@ def _parse_after_match(after_match: str, k_total: int) -> tuple[str, int | None]
     return (m.group(1), pos)
 
 
-def _check_skip_target(mode, target, steps_or_none, loop_pos, opt, k_total):
-    """Shared skip-to target validation: the target must be MAPPED in
-    every match (not optional), and a loop target must carry binding
-    measures with at least one guaranteed hop — the skip point is read
-    from the loop's first/last bound row."""
-    if mode not in ("first", "last"):
-        return
-    if target == 1:
-        # (an ANCHOR-position loop remaps its legal skip_to_last:1 to the
-        # desugared inner loop before reaching this check)
-        raise ValueError(
-            "skip_to target position 1 is the match's first row — "
-            "skipping to it would re-find the same match forever, "
-            "MATCH_RECOGNIZE's runtime-error case"
-        )
-    if target in opt:
-        raise ValueError(
-            f"skip_to target step {target} is optional: a skipped "
-            "optional leaves the skip variable unmapped (the "
-            "MATCH_RECOGNIZE error case) — target a required step"
-        )
-    if target in loop_pos:
-        sp_ = steps_or_none[target - 1]
-        if not sp_.bind:
+def _check_pattern(k, loops, opt, strict, step_within, forbid, after_match, counts):
+    """The pattern-shape rules both twins share, run on the pattern as it
+    stands after the anchor-loop desugar (position 1 is never a loop
+    here).  ``loops`` maps each 1-based loop position to its
+    :class:`LoopStep`; ``opt`` and ``strict`` are 1-based position sets;
+    ``forbid`` says whether a negation is set.  Returns the parsed
+    ``(skip_mode, skip_target)``; a violation raises ``ValueError``."""
+    skip_mode, skip_target = _parse_after_match(after_match, k)
+    if opt:
+        bad = sorted(j for j in opt if not 1 <= j <= k)
+        if bad:
             raise ValueError(
-                f"skip_to target step {target} is a LoopStep without "
-                "bind measures: the skip point is the loop's "
-                f"{mode} bound row — set bind=True on the loop"
+                f"optional step(s) {bad} out of range — the pattern has "
+                f"steps 1..{k}"
             )
-        if sp_.min_n < 1:
+        if step_within is not None:
+            raise ValueError("optional_steps cannot be combined with step_within")
+        if 1 in opt or k in opt:
+            raise ValueError("the anchor and the final step cannot be optional")
+        if any(j + 1 in opt for j in opt):
+            raise ValueError("two consecutive steps cannot both be optional")
+    if loops and step_within is not None:
+        raise ValueError("LoopStep cannot be combined with step_within")
+    if k in loops:
+        # FINAL-position loop: A B+ closed by the anchor horizon (or the
+        # session bound) instead of a closer event
+        if loops[k].min_n < 1:
             raise ValueError(
-                f"skip_to target step {target} is a LoopStep with "
+                "a FINAL LoopStep needs min_n >= 1 (min_n=0 would emit a "
+                "vacuous match for every completed prefix)"
+            )
+        if loops[k].greedy:
+            raise ValueError(
+                "greedy has no effect on a FINAL LoopStep (there is no "
+                "closer to munch past) — drop greedy=True"
+            )
+        if forbid:
+            raise ValueError(
+                "forbid cannot be combined with a FINAL LoopStep (the "
+                "negation interval's right edge is the final matched "
+                "step, which a final loop does not emit)"
+            )
+        if skip_mode != "next":
+            raise ValueError(
+                "a non-default after_match cannot be combined with a "
+                "FINAL LoopStep (the skip point references matched "
+                "rows a deadline-closed loop does not pin down)"
+            )
+    if any(p + 1 in loops for p in loops):
+        raise ValueError("two consecutive steps cannot both be loops")
+    if any(p in opt or p + 1 in opt for p in loops):
+        raise ValueError(
+            "a loop step cannot be optional and its closer (the step "
+            "after it) must be a required non-loop step"
+        )
+    if any(j + 1 in loops for j in opt):
+        # the optional's closer is consumed jointly with it
+        raise ValueError("an optional step's closer cannot be a loop")
+    for p, sp in sorted(loops.items()):
+        if sp.max_n is not None and sp.max_n < sp.min_n:
+            # the stream twin caps hop ACCUMULATION at max_n, so a min_n
+            # above it could never be met there while the batch count
+            # (uncapped) could — reject the vacuous spec instead
+            raise ValueError(
+                f"step {p}: LoopStep max_n ({sp.max_n}) < min_n ({sp.min_n})"
+            )
+    for s in sorted(strict):
+        if not (2 <= s <= k):
+            raise ValueError(
+                f"strict step {s} out of range (the anchor cannot be "
+                "strict — nothing precedes it)"
+            )
+        if s in loops or s in opt:
+            raise ValueError(
+                f"strict step {s}: a loop or optional step cannot be "
+                "strict (its match is not a single next event)"
+            )
+        if (s - 1) in loops or (s - 1) in opt:
+            raise ValueError(
+                f"strict step {s}: the step after a loop or an optional "
+                "cannot be strict (the previous matched row is not a "
+                "single fixed event)"
+            )
+    if skip_mode in ("first", "last"):
+        # the skip-to target must be MAPPED in every match; a loop target
+        # is read from its first/last bound hop
+        if skip_target == 1:
+            raise ValueError(
+                "skip_to target position 1 is the match's first row — "
+                "skipping to it would re-find the same match forever, "
+                "MATCH_RECOGNIZE's runtime-error case"
+            )
+        if skip_target in opt:
+            raise ValueError(
+                f"skip_to target step {skip_target} is optional: a skipped "
+                "optional leaves the skip variable unmapped (the "
+                "MATCH_RECOGNIZE error case) — target a required step"
+            )
+        if skip_target in loops and not loops[skip_target].bind:
+            raise ValueError(
+                f"skip_to target step {skip_target} is a LoopStep without "
+                "bind measures: the skip point is the loop's "
+                f"{skip_mode} bound row — set bind=True on the loop"
+            )
+        if skip_target in loops and loops[skip_target].min_n < 1:
+            raise ValueError(
+                f"skip_to target step {skip_target} is a LoopStep with "
                 "min_n=0: a zero-hop loop leaves the skip variable "
                 "unmapped — require min_n >= 1"
             )
-
-
-def _remap_skip_for_anchor_loop(after_match: str, k_total: int) -> str:
-    """Remap a positional skip-to target across the anchor-loop desugar
-    (``A+ B …`` -> ``A (A)* B …``): user position j >= 2 becomes j + 1.
-    Position 1 is the anchor LOOP: ``skip_to_first:1`` is the anchor row
-    itself (the statically-rejected infinite-loop case), while
-    ``skip_to_last:1`` is the loop's last hop — exactly the desugared
-    INNER loop's last hop whenever the inner loop is guaranteed nonempty
-    (original ``min_n >= 2``; thinner loops may leave it unmapped and are
-    rejected by the inner validation)."""
-    mode, target = _parse_after_match(after_match, k_total)
-    if mode in ("next", "past_last"):
-        return after_match
-    if target == 1:
-        if mode == "first":
+    for spec in counts or ():
+        if not (1 <= spec.lo_step < spec.hi_step <= k):
+            raise ValueError(f"CountBetween steps out of range: {spec}")
+        if spec.lo_step in opt or spec.hi_step in opt:
+            raise ValueError("CountBetween must anchor on non-optional steps")
+        if spec.lo_step in loops or spec.hi_step in loops:
             raise ValueError(
-                "skip_to_first:1 on an anchor-position loop is the "
-                "match's first row — the statically-rejected "
-                "infinite-loop case"
+                "CountBetween must anchor on matched non-loop steps (loop "
+                "steps emit no ts_k)"
             )
-        return "skip_to_last:2"
-    return f"skip_to_{mode}:{target + 1}"
+    return skip_mode, skip_target
 
 
-def _desugar_anchor_loop(sp: LoopStep, rest_len: int) -> LoopStep:
-    """Shared validation for an ANCHOR-position loop (``A+ B …`` /
-    Flink's ``begin().oneOrMore()``), returning the inner loop of the
-    desugared form ``A (A){min_n-1, max_n-1} B …``: the match's first
-    hop becomes the anchor step, the remaining hops a middle (or, for a
-    pattern that is ONLY a loop, final) LoopStep.  The identity behind
-    the rewrite: the earliest closer whose open interval after the
-    anchor holds ``>= min_n - 1`` further hops is exactly the earliest
-    closer with ``>= min_n`` total hops, and with every loop event
-    anchoring its own potential match this reproduces MATCH_RECOGNIZE's
-    per-row skip-to-next semantics for ``A+ B``."""
+def _out_columns(keys, k, loops, alt, counts, session):
+    """The output columns of a match, in order, as ``(name, ddl type,
+    pandas conversion)``: the key(s), ``session_id`` when ``session``,
+    then per position ``ts_k``/``id_k`` (plus ``branch_k`` where
+    ``alt[k - 1]``) or a loop's measures, then the CountBetween measures.
+    Types are recorded where each column is conceived, never inferred
+    back from name suffixes (a CountBetween named "err_ts" yields a LONG
+    ``n_err_ts``).  Conversions: ts -> datetime, id/branch -> nullable
+    ints (skipped optionals emit nulls), counts / session ordinal / key
+    -> none.  Duplicate names raise: they would otherwise surface as an
+    ambiguous-reference error deep inside the plan."""
+
+    def measures(sp):
+        n = sp.name
+        out = [(f"n_{n}", "long", None)]
+        if sp.bind:
+            out += [
+                (f"first_{n}_ts", "timestamp", "datetime"),
+                (f"first_{n}_id", "long", "Int64"),
+                (f"last_{n}_ts", "timestamp", "datetime"),
+                (f"last_{n}_id", "long", "Int64"),
+            ]
+            if sp.bind == "all":
+                out.append((f"{n}_ids", "array<long>", None))
+        return out
+
+    cols = [(c, "long", None) for c in keys]
+    if session:
+        cols.append(("session_id", "long", None))
+    for i in range(1, k + 1):
+        if i in loops:
+            cols += measures(loops[i])
+            continue
+        cols += [(f"ts_{i}", "timestamp", "datetime"), (f"id_{i}", "long", "Int64")]
+        if alt[i - 1]:
+            cols.append((f"branch_{i}", "int", "Int32"))
+    for spec in counts or ():
+        cols += measures(spec)
+    names = [n for n, _, _ in cols]
+    dupes = sorted({n for n in names if names.count(n) > 1})
+    if dupes:
+        raise ValueError(
+            f"duplicate output column name(s) {dupes}: LoopStep/CountBetween "
+            "names must be distinct and must not collide with the "
+            "ts_k/id_k/branch_k/session_id pattern columns or the key"
+        )
+    return cols
+
+
+def _shift_pos(p: int) -> int:
+    """A 1-based position of the pattern as written, in the anchor-loop
+    desugar ``A+ B …`` -> ``A (A)* B …``: the inner loop is inserted at
+    position 2, so every position from 2 on moves up by one."""
+    return p + 1 if p >= 2 else p
+
+
+def _anchor_loop_args(steps, optional_steps, strict, counts, after_match):
+    """The anchor-loop desugar both twins share (``A+ B …`` / Flink's
+    ``begin().oneOrMore()``): returns the inner loop of ``A (A){min_n-1,
+    max_n-1} B …`` and the position-bearing keyword arguments remapped
+    onto the desugared pattern.  The match's first hop becomes the
+    anchor step, the remaining hops a middle (or, for a pattern that is
+    ONLY a loop, final) LoopStep.  The identity behind the rewrite: the
+    earliest closer whose open interval after the anchor holds
+    ``>= min_n - 1`` further hops is exactly the earliest closer with
+    ``>= min_n`` total hops, and with every loop event anchoring its own
+    potential match this reproduces MATCH_RECOGNIZE's per-row
+    skip-to-next semantics for ``A+ B``.
+
+    Remaps: ``skip_to_first:1`` is the anchor row itself (the
+    infinite-loop case) and raises; ``skip_to_last:1`` is the inner
+    loop's last hop, mapped whenever the loop has ``min_n >= 2`` (thinner
+    loops are rejected by the target check).  CountBetween indices shift
+    by one, so one anchored on the loop lands on the inner loop, which
+    the shared check rejects."""
+    sp = steps[0]
     if sp.min_n < 1:
         raise ValueError(
             "an ANCHOR-position LoopStep needs min_n >= 1 (A* cannot "
             "anchor — something must start the match)"
         )
-    if rest_len == 0:
+    if len(steps) == 1:
         # [LoopStep] alone: A{m,} closed by the anchor horizon / session
         # bound — desugars onto the FINAL-loop path
         if sp.min_n < 2:
@@ -359,27 +487,29 @@ def _desugar_anchor_loop(sp: LoopStep, rest_len: int) -> LoopStep:
                 "with bind=False the emitted rows would carry no match "
                 "identity (no closer step exists to emit ts_k/id_k)"
             )
-    return _dc_replace(
+    mode, target = _parse_after_match(after_match, len(steps))
+    if target == 1 and mode == "first":
+        raise ValueError(
+            "skip_to_first:1 on an anchor-position loop is the "
+            "match's first row — the statically-rejected "
+            "infinite-loop case"
+        )
+    if target is not None:
+        after_match = f"skip_to_{mode}:{target + 1}"
+    inner = _dc_replace(
         sp,
         min_n=sp.min_n - 1,
         max_n=None if sp.max_n is None else sp.max_n - 1,
     )
-
-
-def _shift_counts_for_anchor_loop(counts):
-    """Step indices in user-facing CountBetween specs refer to the
-    PRE-desugar pattern; the desugared pattern has one extra step in
-    front, so every reference shifts by one.  Index 1 is the loop itself
-    and stays rejected (loops emit no ts_k to anchor a count on)."""
-    out = []
-    for c in counts or ():
-        if c.lo_step == 1 or c.hi_step == 1:
-            raise ValueError(
-                "CountBetween must anchor on matched non-loop steps (loop "
-                "steps emit no ts_k)"
-            )
-        out.append(_dc_replace(c, lo_step=c.lo_step + 1, hi_step=c.hi_step + 1))
-    return out or None
+    return inner, dict(
+        optional_steps={_shift_pos(i) for i in optional_steps or ()} or None,
+        strict_steps={_shift_pos(s) for s in strict} or None,
+        counts=[
+            _dc_replace(c, lo_step=c.lo_step + 1, hi_step=c.hi_step + 1)
+            for c in counts or ()
+        ] or None,
+        after_match=after_match,
+    )
 
 
 def _anchor_loop_project(out: DataFrame, name: str, bind) -> DataFrame:
@@ -488,8 +618,9 @@ def match_sequence(
     step k-1 occurs strictly before the earliest candidate of step k+1 —
     i.e. whichever qualifying event comes first in event time decides, so
     in-order streaming needs no backtracking. Skipped steps emit null
-    ``ts_k``/``id_k``. Constraints: the anchor (step 1) and the final step
-    cannot be optional, two consecutive steps cannot both be optional, and
+    ``ts_k``/``id_k``. Constraints (``_check_pattern``, shared with the
+    stream twin): the anchor (step 1) and the final step cannot be
+    optional, two consecutive steps cannot both be optional, and
     ``step_within`` cannot be combined with optionals (the gap base would
     be ambiguous) — violations raise.
 
@@ -535,9 +666,9 @@ def match_sequence(
                 "step 1: batch LoopStep needs pred= (a Column or a list "
                 "of Columns)"
             )
-        if len(steps) > 1 and isinstance(steps[1], LoopStep):
-            raise ValueError("two consecutive steps cannot both be loops")
-        inner = _desugar_anchor_loop(sp0, len(steps) - 1)
+        inner, shifted = _anchor_loop_args(
+            steps, optional_steps, strict, counts, after_match
+        )
         anchor_spec = (
             sp0.pred if isinstance(sp0.pred, Column) else list(sp0.pred)
         )
@@ -570,106 +701,30 @@ def match_sequence(
             within=within,
             forbid=forbid,
             step_within=step_within,
-            optional_steps=(
-                {i + 1 if i >= 2 else i for i in optional_steps}
-                if optional_steps
-                else None
-            ),
-            counts=_shift_counts_for_anchor_loop(counts),
-            after_match=_remap_skip_for_anchor_loop(after_match, len(steps)),
-            strict_steps={s + 1 if s >= 2 else s for s in strict} or None,
+            **shifted,
         )
         return _anchor_loop_project(out, sp0.name, sp0.bind)
     if len(steps) < 2:
         raise ValueError("match_sequence needs at least 2 steps")
-    skip_mode, skip_target = _parse_after_match(after_match, len(steps))
     k_total = len(steps)
     opt = set(optional_steps or ())
-    if opt:
-        if step_within is not None:
-            raise ValueError("optional_steps cannot be combined with step_within")
-        if 1 in opt or k_total in opt:
-            raise ValueError("the anchor and the final step cannot be optional")
-        if any(k + 1 in opt for k in opt):
-            raise ValueError("two consecutive steps cannot both be optional")
-    loop_pos = {
-        j + 1 for j, s in enumerate(steps) if isinstance(s, LoopStep)
-    }
-    if loop_pos:
-        if step_within is not None:
-            raise ValueError("LoopStep cannot be combined with step_within")
-        # position 1 cannot be a loop here: the anchor-loop desugar above
-        # already rewrote it to a plain anchor + inner loop
-        if k_total in loop_pos:
-            # FINAL-position loop: A B+ closed by the anchor horizon (or the
-            # session bound in sessionized mode) instead of a closer event
-            fspec = steps[k_total - 1]
-            if fspec.min_n < 1:
-                raise ValueError(
-                    "a FINAL LoopStep needs min_n >= 1 (min_n=0 would emit a "
-                    "vacuous match for every completed prefix)"
-                )
-            if fspec.greedy:
-                raise ValueError(
-                    "greedy has no effect on a FINAL LoopStep (there is no "
-                    "closer to munch past) — drop greedy=True"
-                )
-            if forbid is not None:
-                raise ValueError(
-                    "forbid cannot be combined with a FINAL LoopStep (the "
-                    "negation interval's right edge is the final matched "
-                    "step, which a final loop does not emit)"
-                )
-            if after_match != "skip_to_next":
-                raise ValueError(
-                    "a non-default after_match cannot be combined with a "
-                    "FINAL LoopStep (the skip point references matched "
-                    "rows a deadline-closed loop does not pin down)"
-                )
-        if any(p + 1 in loop_pos for p in loop_pos):
-            raise ValueError("two consecutive steps cannot both be loops")
-        if loop_pos & opt or any(p + 1 in opt for p in loop_pos):
+    loops = {j + 1: s for j, s in enumerate(steps) if isinstance(s, LoopStep)}
+    for p, sp_ in loops.items():
+        if not _valid_loop_pred(sp_.pred):
             raise ValueError(
-                "a loop step cannot be optional and its closer (the step "
-                "after it) must be a required non-loop step"
+                f"step {p}: batch LoopStep needs pred= (a Column or a "
+                "list of Columns)"
             )
-        for p in loop_pos:
-            if not _valid_loop_pred(steps[p - 1].pred):
-                raise ValueError(
-                    f"step {p}: batch LoopStep needs pred= (a Column or a "
-                    "list of Columns)"
-                )
-            sp_ = steps[p - 1]
-            if sp_.max_n is not None and sp_.max_n < sp_.min_n:
-                # the stream twin caps hop ACCUMULATION at max_n, so a
-                # min_n above it could never be met there while the batch
-                # count (uncapped) could — reject the vacuous spec instead
-                # of letting the twins diverge
-                raise ValueError(
-                    f"step {p}: LoopStep max_n ({sp_.max_n}) < min_n "
-                    f"({sp_.min_n})"
-                )
-    for j in opt:
-        # the optional's closer is consumed jointly with it
-        if j + 1 in loop_pos:
-            raise ValueError("an optional step's closer cannot be a loop")
-    for s in strict:
-        if not (2 <= s <= k_total):
+    for spec in counts or ():
+        if spec.pred is None:
             raise ValueError(
-                f"strict step {s} out of range (the anchor cannot be "
-                "strict — nothing precedes it)"
+                "batch CountBetween needs pred= (a Column; value= is the "
+                "stream twin's literal)"
             )
-        if s in loop_pos or s in opt:
-            raise ValueError(
-                f"strict step {s}: a loop or optional step cannot be "
-                "strict (its match is not a single next event)"
-            )
-        if (s - 1) in loop_pos or (s - 1) in opt:
-            raise ValueError(
-                f"strict step {s}: the step after a loop or an optional "
-                "cannot be strict (the previous matched row is not a "
-                "single fixed event)"
-            )
+    skip_mode, skip_target = _check_pattern(
+        k_total, loops, opt, strict, step_within, forbid is not None,
+        after_match, counts,
+    )
     cross_pos = {
         j + 1 for j, s in enumerate(steps) if isinstance(s, CrossPred)
     }
@@ -695,7 +750,7 @@ def match_sequence(
                         "is not a PRIOR step (only already-bound rows can "
                         "be referenced)"
                     )
-                if j in loop_pos:
+                if j in loops:
                     raise ValueError(
                         f"step {p}: CrossPred cannot reference loop step "
                         f"{j}'s payload (a loop binds no single row — "
@@ -722,54 +777,12 @@ def match_sequence(
                         "column"
                     )
         captures = {j: sorted(cols) for j, cols in captures.items()}
-    _check_skip_target(skip_mode, skip_target, steps, loop_pos, opt, k_total)
-    for spec in counts or ():
-        if not (1 <= spec.lo_step < spec.hi_step <= k_total):
-            raise ValueError(f"CountBetween steps out of range: {spec}")
-        if spec.lo_step in opt or spec.hi_step in opt:
-            raise ValueError("CountBetween must anchor on non-optional steps")
-        if spec.lo_step in loop_pos or spec.hi_step in loop_pos:
-            raise ValueError(
-                "CountBetween must anchor on matched non-loop steps (loop "
-                "steps emit no ts_k)"
-            )
     for j, s in enumerate(steps):
         if _is_alt(s) and not len(s):
             raise ValueError(f"step {j + 1}: alternation needs >= 1 branch")
-    # duplicate measure names (two default-named loops, a CountBetween
-    # colliding with a loop, or a name shadowing the ts_k/id_k/branch_k
-    # pattern columns or the key) would surface as an ambiguous-reference
-    # AnalysisException deep inside the join cascade — reject up front
-    # with the stream twin's contract
-    out_names = list(key_cols)
-    for k in range(1, k_total + 1):
-        out_names += [f"ts_{k}", f"id_{k}", f"branch_{k}"]
-    for p in sorted(loop_pos):
-        sp_ = steps[p - 1]
-        out_names.append(f"n_{sp_.name}")
-        if sp_.bind:
-            out_names += [
-                f"first_{sp_.name}_ts", f"first_{sp_.name}_id",
-                f"last_{sp_.name}_ts", f"last_{sp_.name}_id",
-            ]
-            if sp_.bind == "all":
-                out_names.append(f"{sp_.name}_ids")
-    for spec in counts or ():
-        out_names.append(f"n_{spec.name}")
-        if spec.bind:
-            out_names += [
-                f"first_{spec.name}_ts", f"first_{spec.name}_id",
-                f"last_{spec.name}_ts", f"last_{spec.name}_id",
-            ]
-            if spec.bind == "all":
-                out_names.append(f"{spec.name}_ids")
-    if len(set(out_names)) != len(out_names):
-        dupes = sorted({n for n in out_names if out_names.count(n) > 1})
-        raise ValueError(
-            f"duplicate output column name(s) {dupes}: LoopStep/CountBetween "
-            "names must be distinct and must not collide with the "
-            "ts_k/id_k/branch_k pattern columns or the key"
-        )
+    _out_columns(
+        key_cols, k_total, loops, [_is_alt(s) for s in steps], counts, False
+    )
     # null time/id rows can neither anchor nor advance (null comparisons are
     # false) and the min(struct) tiebreak is ill-defined on null ids — drop
     # them up front so batch and stream treat contract-violating rows
@@ -869,7 +882,7 @@ def match_sequence(
             prev_ts = f"ts_{k + 1}"
             k += 2
             continue
-        if k in loop_pos and k == k_total:
+        if k in loops and k == k_total:
             # FINAL-position Kleene loop: no closer event — the loop closes
             # at the anchor horizon (ts_1 + within), or at the session bound
             # when the caller sessionized the key and made `within` inert.
@@ -930,7 +943,7 @@ def match_sequence(
             cur = agg.select(*proj)
             k += 1
             continue
-        if k in loop_pos:
+        if k in loops:
             # Kleene loop step k, closed jointly by required step k+1: the
             # closer is the earliest candidate whose open interval back to
             # the previous matched step holds >= min_n loop events (excess
@@ -1267,7 +1280,7 @@ def match_sequence(
         # match — inclusive comparison).
         if skip_mode == "past_last":
             skip_ts, skip_id, incl = f"ts_{k_total}", f"id_{k_total}", False
-        elif skip_target in loop_pos:
+        elif skip_target in loops:
             nm = steps[skip_target - 1].name
             skip_ts, skip_id = f"{skip_mode}_{nm}_ts", f"{skip_mode}_{nm}_id"
             incl = True
@@ -2314,7 +2327,8 @@ def match_sequence_stream(
     or skip past). ``after_match`` mirrors the batch twin's full AFTER
     MATCH SKIP family — ``skip_to_next`` (default), ``skip_past_last``,
     and the positional ``skip_to_first:<pos>`` / ``skip_to_last:<pos>``
-    (inclusive resume at the bound row; same target constraints) — with
+    (inclusive resume at the bound row; the same ``_check_pattern``
+    target constraints) — with
     the resume point carried in the state header across micro-batches.
     For the same reason
     ``optional_steps`` (same no-lookahead greedy rule as batch: the
@@ -2387,8 +2401,9 @@ def match_sequence_stream(
     non-vocabulary types, buffered (``ordered=False``) mode transits ALL
     events through the buffer when strict steps are present — the same
     discipline (and per-event cost) as ``session_gap``; ordered mode
-    already sees every event.  Same constraints as batch: the anchor, a
-    loop/optional, or the step right after one cannot be strict."""
+    already sees every event.  Same constraints as batch, from the one
+    ``_check_pattern``: the anchor, a loop/optional, or the step right
+    after one cannot be strict."""
     import numpy as np
     import pandas as pd
 
@@ -2418,8 +2433,6 @@ def match_sequence_stream(
             raise ValueError(
                 "stream LoopStep needs value= (literal type or tuple)"
             )
-        if len(step_values) > 1 and isinstance(step_values[1], LoopStep):
-            raise ValueError("two consecutive steps cannot both be loops")
         if cross_conds:
             # the desugar would silently remap a reference to step 1 onto
             # the extracted first rep — but the user's step 1 is the LOOP,
@@ -2431,7 +2444,9 @@ def match_sequence_stream(
                     "cross_conds cannot condition or reference step 1 when "
                     "it is a Kleene loop — a loop binds no single row"
                 )
-        inner = _desugar_anchor_loop(sp0, len(step_values) - 1)
+        inner, shifted = _anchor_loop_args(
+            step_values, optional_steps, strict, counts, after_match
+        )
         out = match_sequence_stream(
             stream,
             [sp0.value, inner, *step_values[1:]],
@@ -2444,28 +2459,16 @@ def match_sequence_stream(
             idle_timeout_ms=idle_timeout_ms,
             forbid_value=forbid_value,
             step_within=step_within,
-            optional_steps=(
-                {i + 1 if i >= 2 else i for i in optional_steps}
-                if optional_steps
-                else None
-            ),
-            counts=_shift_counts_for_anchor_loop(counts),
             ordered=ordered,
-            after_match=_remap_skip_for_anchor_loop(
-                after_match, len(step_values)
-            ),
             session_gap=session_gap,
-            strict_steps={s + 1 if s >= 2 else s for s in strict} or None,
             nav_conds=(
-                {(p + 1 if p >= 2 else p): cs
-                 for p, cs in nav_conds.items()}
+                {_shift_pos(p): cs for p, cs in nav_conds.items()}
                 if nav_conds
                 else None
             ),
             cross_conds=(
-                {(p + 1 if p >= 2 else p): [
-                    (ca, cmp_, (j + 1 if j >= 2 else j), cb)
-                    for ca, cmp_, j, cb in cs
+                {_shift_pos(p): [
+                    (ca, cmp_, _shift_pos(j), cb) for ca, cmp_, j, cb in cs
                 ] for p, cs in cross_conds.items()}
                 if cross_conds
                 else None
@@ -2476,16 +2479,16 @@ def match_sequence_stream(
                 # hop of the user's loop is re-tested either way
                 {q: cs
                  for p, cs in local_conds.items()
-                 for q in ((1, 2) if p == 1 else (p + 1,))}
+                 for q in ((1, 2) if p == 1 else (_shift_pos(p),))}
                 if local_conds
                 else None
             ),
+            **shifted,
         )
         return _anchor_loop_project(out, sp0.name, sp0.bind)
     k = len(step_values)
     if k < 2:
         raise ValueError("match_sequence_stream needs at least 2 steps")
-    skip_mode, skip_target = _parse_after_match(after_match, k)
     # normalize alternation: every step is a tuple of acceptable literals;
     # LoopStep entries mirror the batch steps list (value= instead of
     # pred=, like step_values vs steps)
@@ -2498,11 +2501,6 @@ def match_sequence_stream(
                     "stream LoopStep needs value= (literal type or tuple)"
                 )
             vals = (v.value,) if isinstance(v.value, str) else tuple(v.value)
-            if v.max_n is not None and v.max_n < v.min_n:
-                raise ValueError(
-                    f"step {j + 1}: LoopStep max_n ({v.max_n}) < min_n "
-                    f"({v.min_n})"
-                )
             loop0[j] = (vals, v.min_n, v.max_n, v.bind, v.name,
                         v.greedy)
             stepsets.append(vals)
@@ -2511,87 +2509,31 @@ def match_sequence_stream(
     if any(not ss for ss in stepsets):
         raise ValueError("an alternation step needs >= 1 value")
     alt = [len(ss) > 1 and j not in loop0 for j, ss in enumerate(stepsets)]
-    loop_pos = {j + 1 for j in loop0}
+    loops = {j + 1: step_values[j] for j in loop0}
     opt = set(optional_steps or ())
-    if loop_pos:
-        if step_within is not None:
-            raise ValueError("LoopStep cannot be combined with step_within")
-        # position 1 cannot be a loop here: the anchor-loop desugar above
-        # already rewrote it to a plain anchor + inner loop
-        if k in loop_pos:
-            # FINAL-position loop: emission is DEADLINE-driven (the anchor
-            # horizon or the session bound), which only the watermark
-            # machinery of buffered mode can observe — ordered mode has no
-            # event-time finality signal, so a tail partial would hang
-            _flv, _flmn, _flmx, _flb, _fln, _flg = loop0[k - 1]
-            if _flmn < 1:
-                raise ValueError(
-                    "a FINAL LoopStep needs min_n >= 1 (min_n=0 would emit "
-                    "a vacuous match for every completed prefix)"
-                )
-            if _flg:
-                raise ValueError(
-                    "greedy has no effect on a FINAL LoopStep (there is no "
-                    "closer to munch past) — drop greedy=True"
-                )
-            if ordered:
-                raise ValueError(
-                    "a FINAL LoopStep requires ordered=False: its emission "
-                    "is deadline-driven (anchor horizon / session bound), "
-                    "which needs the buffered mode's watermark finality"
-                )
-            if forbid_value is not None:
-                raise ValueError(
-                    "forbid_value cannot be combined with a FINAL LoopStep "
-                    "(the negation interval's right edge is the final "
-                    "matched step, which a final loop does not emit)"
-                )
-            if after_match != "skip_to_next":
-                raise ValueError(
-                    "a non-default after_match cannot be combined with a "
-                    "FINAL LoopStep (the skip point references matched "
-                    "rows a deadline-closed loop does not pin down)"
-                )
-        if any(p + 1 in loop_pos for p in loop_pos):
-            raise ValueError("two consecutive steps cannot both be loops")
-        if loop_pos & opt or any(p + 1 in opt for p in loop_pos):
+    specs = list(counts or ())
+    for spec in specs:
+        if spec.value is None:
+            raise ValueError("stream CountBetween needs value= (literal type)")
+    skip_mode, skip_target = _check_pattern(
+        k, loops, opt, strict, step_within, forbid_value is not None,
+        after_match, specs,
+    )
+    if k in loops and ordered:
+        # a FINAL loop's emission is DEADLINE-driven (the anchor horizon
+        # or the session bound), which only the watermark machinery of
+        # buffered mode can observe — a tail partial would hang
+        raise ValueError(
+            "a FINAL LoopStep requires ordered=False: its emission "
+            "is deadline-driven (anchor horizon / session bound), "
+            "which needs the buffered mode's watermark finality"
+        )
+    for j in opt:
+        if set(stepsets[j - 1]) & set(stepsets[j]):
             raise ValueError(
-                "a loop step cannot be optional and its closer (the step "
-                "after it) must be a required non-loop step"
+                "an optional step's value(s) must be disjoint from its "
+                "closer's"
             )
-        if any(j + 1 in loop_pos for j in opt):
-            raise ValueError("an optional step's closer cannot be a loop")
-    if opt:
-        if step_within is not None:
-            raise ValueError("optional_steps cannot be combined with step_within")
-        if 1 in opt or k in opt:
-            raise ValueError("the anchor and the final step cannot be optional")
-        if any(j + 1 in opt for j in opt):
-            raise ValueError("two consecutive steps cannot both be optional")
-        for j in opt:
-            if set(stepsets[j - 1]) & set(stepsets[j]):
-                raise ValueError(
-                    "an optional step's value(s) must be disjoint from its "
-                    "closer's"
-                )
-    for s in strict:
-        if not (2 <= s <= k):
-            raise ValueError(
-                f"strict step {s} out of range (the anchor cannot be "
-                "strict — nothing precedes it)"
-            )
-        if s in loop_pos or s in opt:
-            raise ValueError(
-                f"strict step {s}: a loop or optional step cannot be "
-                "strict (its match is not a single next event)"
-            )
-        if (s - 1) in loop_pos or (s - 1) in opt:
-            raise ValueError(
-                f"strict step {s}: the step after a loop or an optional "
-                "cannot be strict (the previous matched row is not a "
-                "single fixed event)"
-            )
-    _check_skip_target(skip_mode, skip_target, step_values, loop_pos, opt, k)
     _NAV_CMP = {
         "<": lambda a, b: a < b, "<=": lambda a, b: a <= b,
         ">": lambda a, b: a > b, ">=": lambda a, b: a >= b,
@@ -2769,19 +2711,6 @@ def match_sequence_stream(
                     "cross or local condition (a type-free step would "
                     "match every event)"
                 )
-    specs = list(counts or ())
-    for spec in specs:
-        if spec.value is None:
-            raise ValueError("stream CountBetween needs value= (literal type)")
-        if not (1 <= spec.lo_step < spec.hi_step <= k):
-            raise ValueError(f"CountBetween steps out of range: {spec}")
-        if spec.lo_step in opt or spec.hi_step in opt:
-            raise ValueError("CountBetween must anchor on non-optional steps")
-        if spec.lo_step in loop_pos or spec.hi_step in loop_pos:
-            raise ValueError(
-                "CountBetween must anchor on matched non-loop steps (loop "
-                "steps emit no ts_k)"
-            )
     if not ordered and idle_timeout_ms is not None:
         raise ValueError(
             "idle_timeout_ms requires ordered=True (buffered mode evicts by "
@@ -2794,54 +2723,14 @@ def match_sequence_stream(
             "would-be session split), which only the buffered mode sees"
         )
     opt0 = {j - 1 for j in opt}  # 0-based indices of optional steps
-    # output schema tracked STRUCTURALLY — (name, ddl type, pandas
-    # conversion) recorded where each column is conceived, never inferred
-    # back from name suffixes (a CountBetween named "err_ts" must yield a
-    # LONG n_err_ts, not a timestamp). Conversions: ts -> datetime,
-    # id/branch -> nullable ints (skipped optionals emit nulls), counts /
-    # session ordinal / key -> plain non-null.
-    out_typed: list[tuple[str, str, str | None]] = [(key_col, "long", None)]
-    if session_gap is not None:
-        out_typed.append(("session_id", "long", None))
-    for i in range(1, k + 1):
-        if (i - 1) in loop0:
-            _lv, _lmn, _lmx, lbind, lname, _lg = loop0[i - 1]
-            out_typed.append((f"n_{lname}", "long", None))
-            if lbind:
-                out_typed.append((f"first_{lname}_ts", "timestamp", "datetime"))
-                out_typed.append((f"first_{lname}_id", "long", "Int64"))
-                out_typed.append((f"last_{lname}_ts", "timestamp", "datetime"))
-                out_typed.append((f"last_{lname}_id", "long", "Int64"))
-                if lbind == "all":
-                    out_typed.append((f"{lname}_ids", "array<long>", None))
-            continue
-        out_typed.append((f"ts_{i}", "timestamp", "datetime"))
-        out_typed.append((f"id_{i}", "long", "Int64"))
-        if alt[i - 1]:
-            out_typed.append((f"branch_{i}", "int", "Int32"))
-    for spec in specs:
-        out_typed.append((f"n_{spec.name}", "long", None))
-        if spec.bind:
-            out_typed.append((f"first_{spec.name}_ts", "timestamp", "datetime"))
-            out_typed.append((f"first_{spec.name}_id", "long", "Int64"))
-            out_typed.append((f"last_{spec.name}_ts", "timestamp", "datetime"))
-            out_typed.append((f"last_{spec.name}_id", "long", "Int64"))
-            if spec.bind == "all":
-                out_typed.append((f"{spec.name}_ids", "array<long>", None))
-    out_names = [n for n, _, _ in out_typed]
-    if len(set(out_names)) != len(out_names):
-        dupes = sorted({n for n in out_names if out_names.count(n) > 1})
-        raise ValueError(
-            f"duplicate output column name(s) {dupes}: CountBetween names "
-            "must be distinct and must not collide with the "
-            "ts_k/id_k/branch_k/session_id pattern columns or the key"
-        )
+    out_typed = _out_columns(
+        [key_col], k, loops, alt, specs, session_gap is not None
+    )
     if key_col not in stream.columns:
         raise ValueError(f"key column {key_col!r} not in the stream schema")
     key_ddl = stream.schema[key_col].dataType.simpleString()
     out_typed[0] = (key_col, key_ddl, None)
     out_ddl = ", ".join(f"{n} {t}" for n, t, _ in out_typed)
-    pd_conv = {n: cv for n, _, cv in out_typed}
     within_ns = pd.Timedelta(within).value
     step_ns = pd.Timedelta(step_within).value if step_within else None
     # vocabulary for the out-of-order buffer: only events whose type can
@@ -3258,8 +3147,7 @@ def match_sequence_stream(
         # column by column: ns timestamps without a null view as
         # datetime64 directly, instead of a to_datetime pass per column
         out = {}
-        for c, vals in zip(out_names, zip(*rows)):
-            cv = pd_conv[c]
+        for (c, _, cv), vals in zip(out_typed, zip(*rows)):
             if cv == "datetime":
                 out[c] = (
                     pd.to_datetime(pd.Series(vals, dtype="Int64"))

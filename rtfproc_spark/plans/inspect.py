@@ -56,7 +56,3 @@ def python_eval_nodes(df: DataFrame) -> int:
             plan_str(df),
         )
     )
-
-
-def wholestage_codegen_spans(df: DataFrame) -> int:
-    return len(re.findall(r"WholeStageCodegen \(\d+\)", plan_str(df, "simple")))

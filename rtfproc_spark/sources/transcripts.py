@@ -232,12 +232,6 @@ def synthesize_transcripts_df(
     return df
 
 
-def write_transcripts(spark, path: str, **kwargs) -> None:
-    """Materialize as a parquet table partition-friendly by conv_id hash."""
-    df = synthesize_transcripts_df(spark, **kwargs)
-    df.write.mode("overwrite").parquet(path)
-
-
 def write_transcripts_bucketed(
     spark, table: str, n_buckets: int = 64, **kwargs
 ) -> None:

@@ -30,43 +30,6 @@ def stream_transcripts(
     return r.parquet(path)
 
 
-def rate_transcripts_stream(
-    spark: SparkSession, rows_per_second: int = 1000, n_convs: int = 1000
-) -> DataFrame:
-    """Unbounded synthetic turn stream from the rate source (B1 bench path):
-    each tick becomes a deterministic transcript turn (same generator as the
-    batch corpus, so extraction behavior matches)."""
-    import pandas as pd
-
-    from ..sources.transcripts import ROLES, make_rtf_doc
-
-    rate = spark.readStream.format("rate").option(
-        "rowsPerSecond", rows_per_second
-    ).load()
-
-    def gen(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vals = pdf["value"].to_numpy()
-            conv = vals % n_convs
-            turn = vals // n_convs
-            yield pd.DataFrame(
-                {
-                    "conv_id": [f"conv-{c:06d}" for c in conv],
-                    "turn_idx": turn.astype("int32"),
-                    "role": [ROLES[int(v) % 3] for v in vals],
-                    "text": [
-                        make_rtf_doc(int(c), int(t)) for c, t in zip(conv, turn)
-                    ],
-                    "tool": None,
-                    "ts": pdf["timestamp"].astype("datetime64[us]"),
-                }
-            )
-
-    return rate.mapInPandas(gen, schema=TRANSCRIPTS_DDL)
-
-
 def streaming_extract(stream: DataFrame, pairs=None) -> DataFrame:
     """B2: per-turn extraction projection on the stream."""
     return with_rtf_extract(stream, pairs)

@@ -1001,9 +1001,11 @@ def test_loop_step_sessionized_stream_equals_batch(spark, tmp_path):
 
 
 def test_loop_step_validation_and_codec_v5(spark):
-    """LoopStep constraint violations raise targeted errors on both
-    twins; the state codec round-trips loop slots exactly, and its header
-    records one trailing slot for them (none for loop-FREE partials)."""
+    """LoopStep constraint violations raise the same targeted error on
+    both twins (every shape runs through match_sequence and
+    match_sequence_stream); the state codec round-trips loop slots
+    exactly, and its header records one trailing slot for them (none for
+    loop-FREE partials)."""
     import pytest
 
     from rtfproc_spark.operators.cep import (
@@ -1012,6 +1014,7 @@ def test_loop_step_validation_and_codec_v5(spark):
         decode_state,
         encode_partials,
         match_sequence,
+        match_sequence_stream,
     )
 
     df = spark.createDataFrame(
@@ -1021,25 +1024,41 @@ def test_loop_step_validation_and_codec_v5(spark):
     lp = LoopStep(pred=B, value="B", name="b")
     lp0 = LoopStep(pred=B, value="B", name="b", min_n=0)
     lbad = LoopStep(pred=B, value="B", name="b", min_n=2, max_n=1)
-    for steps, kw in [
-        ([lp0, B], {}),                                 # anchor loop min_n=0
-        ([B, lp0], {}),                                 # final loop min_n=0
-        ([B, lp], {"forbid": F.col("event_type") == "P"}),   # final + forbid
-        ([B, lp], {"after_match": "skip_past_last"}),   # final + skip
-        ([B, lbad, B], {}),                             # max_n < min_n
-        ([B, lp, lp, B], {}),                           # consecutive loops
-        ([B, lp, B, B], {"optional_steps": {2}}),       # loop optional
-        ([B, lp, B, B], {"optional_steps": {3}}),       # closer optional
-        ([B, B, lp, B], {"optional_steps": {2}}),       # optional's closer loop
-        ([B, lp, B], {"step_within": "1 minute"}),      # step_within combo
-        ([B, lp, B], {"counts": [CountBetween(pred=B, lo_step=2, hi_step=3)]}),
+    cb_loop = CountBetween(pred=B, value="B", lo_step=2, hi_step=3)
+    # (steps, kwargs, error) — a Column step B is the literal "B" on the
+    # stream, forbid= is forbid_value=, and a FINAL loop needs ordered=False
+    for steps, kw, err in [
+        ([lp0, B], {}, "min_n >= 1"),                   # anchor loop min_n=0
+        ([B, lp0], {}, "FINAL LoopStep needs min_n"),   # final loop min_n=0
+        ([B, lp], {"forbid": F.col("event_type") == "P"}, "forbid"),
+        ([B, lp], {"after_match": "skip_past_last"}, "after_match"),
+        ([B, lbad, B], {}, "max_n"),                    # max_n < min_n
+        ([B, lp, lp, B], {}, "both be loops"),          # consecutive loops
+        ([B, lp, B, B], {"optional_steps": {2}}, "cannot be optional"),
+        ([B, lp, B, B], {"optional_steps": {3}}, "cannot be optional"),
+        ([B, B, lp, B], {"optional_steps": {2}}, "closer cannot be a loop"),
+        ([B, lp, B], {"step_within": "1 minute"}, "step_within"),
+        ([B, lp, B], {"counts": [cb_loop]}, "non-loop steps"),
+        ([B, lp, B], {"optional_steps": {5}}, "out of range"),
     ]:
-        with pytest.raises(ValueError):
+        with pytest.raises(ValueError, match=err):
             match_sequence(df, steps, ["user_id"], **kw)
+        skw = dict(kw)
+        if "forbid" in skw:
+            skw["forbid_value"] = "P"
+            del skw["forbid"]
+        with pytest.raises(ValueError, match=err):
+            match_sequence_stream(
+                df, ["B" if s is B else s for s in steps],
+                ordered=not isinstance(steps[-1], LoopStep), **skw,
+            )
+    # batch-only: a CountBetween with only the stream's value= set
+    with pytest.raises(ValueError, match="batch CountBetween needs pred="):
+        match_sequence(
+            df, [B, B], ["user_id"], counts=[CountBetween(value="B")]
+        )
     # stream-only constraint: a FINAL loop's emission is deadline-driven,
     # so the ordered (no-watermark-finality) mode must reject it
-    from rtfproc_spark.operators.cep import match_sequence_stream
-
     with pytest.raises(ValueError, match="ordered=False"):
         match_sequence_stream(df, ["B", lp], ordered=True)
     with pytest.raises(ValueError, match="forbid"):
