@@ -285,6 +285,33 @@ def ngram_jaccard_pairs(
     )
 
 
+def _union_find(a, b) -> pd.DataFrame:
+    """Connected components of the edges ``zip(a, b)`` by a
+    path-compressing union-find: one row per node, ``(id, component)``
+    with component = the minimum id reachable from the node. The
+    one-task kernel of :func:`connected_components`' small-graph path and
+    of ``similarity.semantic_dedup``'s per-cluster components."""
+    parent: dict = {}
+
+    def find(x: int) -> int:
+        r = x
+        while parent.get(r, r) != r:
+            r = parent[r]
+        while parent.get(x, x) != x:
+            parent[x], x = r, parent[x]
+        return r
+
+    for x, y in zip(a, b):
+        rx, ry = find(int(x)), find(int(y))
+        if rx != ry:
+            parent[max(rx, ry)] = min(rx, ry)
+    ids = {int(i) for i in a} | {int(i) for i in b}
+    return pd.DataFrame(
+        {"id": list(ids), "component": [find(i) for i in ids]},
+        dtype="int64",
+    )
+
+
 def connected_components(
     pairs: DataFrame,
     a_col: str = "id_a",
@@ -306,11 +333,8 @@ def connected_components(
     with one count per round — no collect of the labels themselves). At
     100 TB scale the per-round cost is two shuffles over the EDGE list
     (edges << docs after LSH pruning), and the label table is checkpointed
-    via localCheckpoint to cut the growing lineage. For graphs whose
-    component diameter outgrows a handful of rounds (chained crawl mirrors,
-    boilerplate families), use ``connected_components_star`` — the
-    alternating large-star/small-star contraction converging in O(log^2 n)
-    rounds instead of O(diameter).
+    via localCheckpoint to cut the growing lineage. A graph whose
+    component diameter outgrows ``max_iters`` rounds raises.
     """
     edges = (
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
@@ -331,31 +355,13 @@ def connected_components(
     # contract either way: (id, component = min reachable id).
     if edges.count() <= small_graph_edges:
 
-        def _uf(pdf: pd.DataFrame) -> pd.DataFrame:
-            parent: dict = {}
-
-            def find(x: int) -> int:
-                r = x
-                while parent.get(r, r) != r:
-                    r = parent[r]
-                while parent.get(x, x) != x:
-                    parent[x], x = r, parent[x]
-                return r
-
-            for a, b in zip(pdf["src"], pdf["dst"]):
-                ra, rb = find(int(a)), find(int(b))
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-            ids = {int(i) for i in pdf["src"]} | {int(i) for i in pdf["dst"]}
-            return pd.DataFrame(
-                {"id": list(ids), "component": [find(i) for i in ids]},
-                dtype="int64",
-            )
-
         return (
             edges.withColumn("_g", F.lit(0))
             .groupBy("_g")
-            .applyInPandas(_uf, schema="id long, component long")
+            .applyInPandas(
+                lambda pdf: _union_find(pdf["src"], pdf["dst"]),
+                schema="id long, component long",
+            )
         )
     # undirected: propagate both ways. NOT pre-partitioned by the join
     # key: a cached fixed-width partitioning would pin every round's join
@@ -407,114 +413,9 @@ def connected_components(
         # near-duplicates with no signal — fail loudly instead
         raise RuntimeError(
             f"connected_components did not converge in {max_iters} iterations "
-            "(component diameter exceeds max_iters); raise max_iters or switch "
-            "to the large-star/small-star contraction for long-chain graphs"
+            "(component diameter exceeds max_iters); raise max_iters"
         )
     return labels
-
-
-def connected_components_star(
-    pairs: DataFrame,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    max_iters: int = 50,
-) -> DataFrame:
-    """Connected components via alternating LARGE-STAR / SMALL-STAR
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — same output contract as ``connected_components`` (one row
-    per node appearing in ``pairs``: (id, component), component = minimum
-    reachable id), but converging in O(log^2 n) rounds instead of
-    O(diameter): the scale path when near-dup graphs chain (crawl mirrors,
-    boilerplate families) beyond min-label propagation's round budget.
-
-    Per round (two shuffles each phase, edges only — no node table join):
-
-    - large-star: every node u links each LARGER neighbor v to
-      m = min(N(u) + {u}) — long chains fold toward their minimum from
-      every interior node at once;
-    - small-star: orient edges (hi, lo); every node links its smaller
-      neighbors and itself to their collective minimum — flattening the
-      partial trees large-star built.
-
-    The fixed point is a star per component (every node points at the
-    component minimum). Fixed-point detection compares (count,
-    sum(xxhash64)) of the edge set between rounds — a content hash, so a
-    round that shuffles rows but changes nothing terminates the loop.
-    Raises if ``max_iters`` rounds pass without convergence (same loud-
-    failure contract as the min-label variant)."""
-    u, v = F.col("u"), F.col("v")
-    edges = (
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
-        .filter(u.isNotNull() & v.isNotNull() & (u != v))
-        .dropDuplicates(["u", "v"])
-        .localCheckpoint()
-    )
-    nodes = (
-        edges.select(u.alias("id"))
-        .unionByName(edges.select(v.alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
-
-    def _sig(e: DataFrame) -> tuple:
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal(38,0) accumulator: a long sum of 64-bit hashes
-            # overflows (ANSI mode raises)
-            F.sum(
-                F.xxhash64(F.least(u, v), F.greatest(u, v)).cast("decimal(38,0)")
-            ).alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    sig = _sig(edges)
-    converged = False
-    for _ in range(max_iters):
-        # LARGE-STAR: neighborhoods in both directions
-        nbrs = edges.unionByName(edges.select(v.alias("u"), u.alias("v")))
-        mins = (
-            nbrs.groupBy("u")
-            .agg(F.min("v").alias("_mn"))
-            .select("u", F.least(F.col("_mn"), u).alias("m"))
-        )
-        edges = (
-            nbrs.join(mins, "u")
-            .filter(v > u)
-            .select(v.alias("u"), F.col("m").alias("v"))
-            .filter(u != v)
-            .dropDuplicates(["u", "v"])
-        )
-        # SMALL-STAR: orient (hi -> lo); node + its smaller neighbors all
-        # link to their collective minimum
-        hilo = edges.select(
-            F.greatest(u, v).alias("u"), F.least(u, v).alias("v")
-        ).dropDuplicates(["u", "v"])
-        mins = hilo.groupBy("u").agg(F.min("v").alias("m"))
-        joined = hilo.join(mins, "u")
-        edges = (
-            joined.select(u.alias("u"), F.col("m").alias("v"))
-            .unionByName(joined.select(v.alias("u"), F.col("m").alias("v")))
-            .filter(u != v)
-            .dropDuplicates(["u", "v"])
-            .localCheckpoint()  # truncate lineage every round
-        )
-        new_sig = _sig(edges)
-        if new_sig == sig:
-            converged = True
-            break
-        sig = new_sig
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iters} rounds"
-        )
-    # fixed point: edges are (child, component-min) stars
-    child_root = edges.select(
-        F.greatest(u, v).alias("id"), F.least(u, v).alias("root")
-    )
-    return (
-        nodes.join(child_root.groupBy("id").agg(F.min("root").alias("root")), "id", "left")
-        .select("id", F.coalesce(F.col("root"), F.col("id")).alias("component"))
-    )
 
 
 def dedup_keep_list(
@@ -523,20 +424,12 @@ def dedup_keep_list(
     id_col: str = "doc_id",
     a_col: str = "id_a",
     b_col: str = "id_b",
-    algorithm: str = "minlabel",
 ) -> DataFrame:
     """Keep-one-per-near-dup-cluster policy: every doc mapped to its cluster
     representative (the minimum id in its connected component; singletons
     keep themselves) plus a ``keep`` flag. The standard final step of a
-    near-dedup pipeline: ``df.join(keep_list, id).filter("keep")``.
-
-    ``algorithm``: "minlabel" (O(diameter) rounds — right for the tiny,
-    dense clusters LSH pruning produces) or "star" (large-star/small-star,
-    O(log^2 n) rounds — right when components chain)."""
-    cc = {"minlabel": connected_components, "star": connected_components_star}[
-        algorithm
-    ]
-    comp = cc(pairs, a_col, b_col)
+    near-dedup pipeline: ``df.join(keep_list, id).filter("keep")``."""
+    comp = connected_components(pairs, a_col, b_col)
     return (
         df.select(F.col(id_col).alias("id"))
         .join(comp, "id", "left")

@@ -17,6 +17,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from rtfproc_spark.functions.dedup import _union_find
+
 
 def _vec_lit(vec) -> Column:
     return F.array(*[F.lit(float(x)) for x in vec])
@@ -607,7 +609,7 @@ def semantic_dedup(
     # Connected components: every edge is WITHIN a cluster by construction
     # (pairs are only generated cluster-locally), so global components ==
     # per-cluster components — a per-cluster union-find in one grouped
-    # kernel replaces the multi-round distributed star contraction (round
+    # kernel replaces the multi-round distributed components loop (round
     # 9: the iterative CC loop cost several shuffles + localCheckpoints
     # per round for edge sets a single task folds in microseconds; the
     # per-cluster edge count is bounded by the max_cluster pair cap). The
@@ -615,29 +617,9 @@ def semantic_dedup(
     # so cluster-local folding does not apply there. Same min-id
     # representative / keep contract, pinned by the shared driver-oracle
     # differential (semantic_dedup_local runs an independent union-find).
-    def _components_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        parent: dict = {}
-
-        def find(x: int) -> int:
-            r = x
-            while parent.get(r, r) != r:
-                r = parent[r]
-            while parent.get(x, x) != x:
-                parent[x], x = r, parent[x]
-            return r
-
-        for a, b in zip(pdf["id_a"], pdf["id_b"]):
-            ra, rb = find(int(a)), find(int(b))
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        ids = {int(i) for i in pdf["id_a"]} | {int(i) for i in pdf["id_b"]}
-        return pd.DataFrame(
-            {"id": list(ids), "component": [find(i) for i in ids]},
-            dtype="int64",
-        )
-
     comp = edges.groupBy("cluster").applyInPandas(
-        _components_kernel, schema="id long, component long"
+        lambda pdf: _union_find(pdf["id_a"], pdf["id_b"]),
+        schema="id long, component long",
     )
     return (
         assigned.join(comp, "id", "left")

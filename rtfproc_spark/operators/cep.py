@@ -30,6 +30,7 @@ operators.skew if a key is truly degenerate.
 
 from __future__ import annotations
 
+import operator
 import re
 import struct
 from dataclasses import dataclass, replace as _dc_replace
@@ -203,9 +204,11 @@ class CrossPred:
     batch-only (``pred`` is a JVM Column); the stream twin is
     :func:`match_sequence_stream`'s ``cross_conds=`` — serializable
     ``(ev_col, cmp, ref_step, ref_col)`` comparisons whose captured
-    values ride CEP state. A referenced step
-    must be a required single-row step bound BEFORE this one; loop
-    bodies and optional steps (and their closers) cannot be CrossPred.
+    values ride CEP state. Both twins run one cross-reference check,
+    ``_check_cross_refs``: the anchor, an optional step and an optional's
+    closer cannot be CrossPred, and a referenced step must be bound
+    BEFORE this one as a required single-row step — not a loop, not an
+    optional and not an optional's closer.
     Physically: the capture rides the earlier step's existing
     ``min(struct)`` aggregate (extra struct fields, no new shuffle), and
     the cross comparison joins with the step's existing candidate join
@@ -327,13 +330,7 @@ def _check_pattern(k, loops, opt, strict, step_within, forbid, after_match, coun
         # the optional's closer is consumed jointly with it
         raise ValueError("an optional step's closer cannot be a loop")
     for p, sp in sorted(loops.items()):
-        if sp.max_n is not None and sp.max_n < sp.min_n:
-            # the stream twin caps hop ACCUMULATION at max_n, so a min_n
-            # above it could never be met there while the batch count
-            # (uncapped) could — reject the vacuous spec instead
-            raise ValueError(
-                f"step {p}: LoopStep max_n ({sp.max_n}) < min_n ({sp.min_n})"
-            )
+        _check_loop_bounds(p, sp)
     for s in sorted(strict):
         if not (2 <= s <= k):
             raise ValueError(
@@ -389,6 +386,65 @@ def _check_pattern(k, loops, opt, strict, step_within, forbid, after_match, coun
                 "steps emit no ts_k)"
             )
     return skip_mode, skip_target
+
+
+def _check_loop_bounds(p: int, sp: LoopStep) -> None:
+    """The stream twin caps hop ACCUMULATION at max_n, so a min_n above
+    it could never be met there while the batch count (uncapped) could —
+    reject the vacuous spec instead."""
+    if sp.max_n is not None and sp.max_n < sp.min_n:
+        raise ValueError(
+            f"step {p}: LoopStep max_n ({sp.max_n}) < min_n ({sp.min_n})"
+        )
+
+
+def _check_cross_refs(refs: dict, loops, opt) -> None:
+    """The cross-reference rules both twins share: batch :class:`CrossPred`
+    steps and the stream's ``cross_conds``.  ``refs`` maps each
+    conditioned 1-based position to the positions its condition reads;
+    ``loops`` and ``opt`` hold the loop and optional positions.  The
+    anchor cannot carry a cross condition, nor can a loop body, an
+    optional or an optional's closer; a referenced step must be bound
+    strictly before, and must be a required single-row step: neither a
+    loop nor an optional or its closer.  A violation raises
+    ``ValueError``."""
+    for p, js in sorted(refs.items()):
+        if p == 1:
+            raise ValueError(
+                "a cross condition on step 1 is out of range: the anchor "
+                "cannot be a CrossPred or carry cross_conds — no prior "
+                "step exists to reference"
+            )
+        if p in loops:
+            raise ValueError(
+                f"step {p} is a loop body — iterative self-conditions are "
+                "not supported; the loop's closer may carry a cross "
+                "condition"
+            )
+        if p in opt or p - 1 in opt:
+            raise ValueError(
+                f"step {p} is optional or the closer of an optional — the "
+                "no-lookahead optional decision has no per-candidate cross "
+                "evaluation"
+            )
+        for j in sorted(js):
+            if not 1 <= j < p:
+                raise ValueError(
+                    f"step {p}: referenced step {j} is not a PRIOR step — "
+                    f"it must be bound strictly before step {p}"
+                )
+            if j in loops:
+                raise ValueError(
+                    f"step {p}: referenced step {j} is a Kleene loop, but "
+                    "a cross reference needs a required non-loop step (a "
+                    "loop binds no single row — reference its closer)"
+                )
+            if j in opt or j - 1 in opt:
+                raise ValueError(
+                    f"step {p}: referenced step {j} is optional or an "
+                    "optional's closer, but a cross reference needs a step "
+                    "not adjacent to an optional (it may bind nothing)"
+                )
 
 
 def _out_columns(keys, k, loops, alt, counts, session):
@@ -472,6 +528,7 @@ def _anchor_loop_args(steps, optional_steps, strict, counts, after_match):
             "an ANCHOR-position LoopStep needs min_n >= 1 (A* cannot "
             "anchor — something must start the match)"
         )
+    _check_loop_bounds(1, sp)
     if len(steps) == 1:
         # [LoopStep] alone: A{m,} closed by the anchor horizon / session
         # bound — desugars onto the FINAL-loop path
@@ -725,43 +782,16 @@ def match_sequence(
         k_total, loops, opt, strict, step_within, forbid is not None,
         after_match, counts,
     )
-    cross_pos = {
-        j + 1 for j, s in enumerate(steps) if isinstance(s, CrossPred)
+    cross = {
+        j + 1: s for j, s in enumerate(steps) if isinstance(s, CrossPred)
     }
+    _check_cross_refs(
+        {p: {j for j, _ in sp_.needs} for p, sp_ in cross.items()}, loops, opt
+    )
     captures: dict[int, list[str]] = {}
-    if cross_pos:
-        if 1 in cross_pos:
-            raise ValueError(
-                "step 1 (the anchor) cannot be a CrossPred — there is no "
-                "prior step to reference"
-            )
-        for p in sorted(cross_pos):
-            if p in opt or (p - 1) in opt:
-                raise ValueError(
-                    f"step {p}: a CrossPred cannot be an optional step or "
-                    "the closer of one (the optional's joint decision has "
-                    "no per-candidate cross evaluation)"
-                )
-            sp_ = steps[p - 1]
+    if cross:
+        for sp_ in cross.values():
             for j, col in sp_.needs:
-                if not (1 <= j < p):
-                    raise ValueError(
-                        f"step {p}: CrossPred references step {j}, which "
-                        "is not a PRIOR step (only already-bound rows can "
-                        "be referenced)"
-                    )
-                if j in loops:
-                    raise ValueError(
-                        f"step {p}: CrossPred cannot reference loop step "
-                        f"{j}'s payload (a loop binds no single row — "
-                        "reference its closer instead)"
-                    )
-                if j in opt or (j - 1) in opt:
-                    raise ValueError(
-                        f"step {p}: CrossPred cannot reference optional "
-                        f"step {j} or the closer of one (it may bind "
-                        "nothing)"
-                    )
                 if col not in df.columns:
                     raise ValueError(
                         f"CrossPred capture column {col!r} is not an "
@@ -2208,6 +2238,19 @@ def _advance_bucket(key_fn, state: GroupState, keyed: list, timeout_conf: str) -
     return rows
 
 
+# the stream DEFINE comparators (nav_conds, cross_conds, local_conds)
+_CMP = {
+    "<": operator.lt, "<=": operator.le, ">": operator.gt,
+    ">=": operator.ge, "=": operator.eq, "<>": operator.ne,
+}
+
+
+def _cmp_ok(cmp_: str, a: float, b: float) -> bool:
+    """``a <cmp_> b`` over payload doubles with SQL NULL semantics: NaN
+    (a NULL payload) on either side fails, ``<>`` included."""
+    return a == a and b == b and _CMP[cmp_](a, b)
+
+
 def match_sequence_stream(
     stream: DataFrame,
     step_values: list,
@@ -2246,7 +2289,8 @@ def match_sequence_stream(
     twin's lag() semantics), conjoined with the step's literal vocabulary
     (use ``"*"`` as the step value for a type-free nav variable).
     Buffered events carry the referenced column values as doubles
-    (NULL -> NaN, every comparison False), the last max-offset processed
+    (NULL -> NaN, every comparison False, through the one ``_cmp_ok``
+    that nav, cross and local conditions share), the last max-offset processed
     values persist in state so PREV crosses micro-batch boundaries; the
     buffer blob records how many values each event carries, and a
     checkpoint written for another count raises the fresh-checkpoint
@@ -2269,10 +2313,12 @@ def match_sequence_stream(
     numeric doubles with SQL NULL semantics (NULL/NaN fails). Works in
     BOTH delivery modes (ordered reads payload transiently from the
     micro-batch; buffered carries it through the out-of-order buffer on
-    the shared payload value vector). Restrictions mirror the batch
-    CrossPred: the conditioned step must be a required non-loop-body
-    step (a loop CLOSER is fine), the referenced step a required
-    non-loop step bound strictly before it.
+    the shared payload value vector). The restrictions are the batch
+    CrossPred's, from the one ``_check_cross_refs``: the conditioned
+    step must be a required non-loop-body step (a loop CLOSER is fine),
+    the referenced step a required non-loop step bound strictly before
+    it; on an ANCHOR-position loop the check runs on the pattern as
+    written, so step 1 can neither carry nor be referenced.
 
     ``local_conds`` (late round 8) are row-local comparisons — the
     ``P AS event_type = 'b' AND value > 10`` form: ``{1-based step p:
@@ -2284,6 +2330,11 @@ def match_sequence_stream(
     checkpoints are untouched; any step may carry them — anchor,
     optional, loop BODY (each hop re-tested) and closer alike. Works in
     both delivery modes like ``cross_conds``.
+
+    The three kinds are validated in one pass: each step in 1..k, each
+    comparator one of ``<, <=, >, >=, =, <>``, and every column they read
+    present and numeric. A nav or local condition on an ANCHOR-position
+    loop applies to every hop of it.
 
     Delivery ordering — two modes:
 
@@ -2433,20 +2484,31 @@ def match_sequence_stream(
             raise ValueError(
                 "stream LoopStep needs value= (literal type or tuple)"
             )
-        if cross_conds:
-            # the desugar would silently remap a reference to step 1 onto
-            # the extracted first rep — but the user's step 1 is the LOOP,
-            # which binds no single row (same rule as the batch CrossPred)
-            if 1 in cross_conds or any(
-                j == 1 for cs in cross_conds.values() for _a, _c, j, _b in cs
-            ):
-                raise ValueError(
-                    "cross_conds cannot condition or reference step 1 when "
-                    "it is a Kleene loop — a loop binds no single row"
-                )
+        # the desugar would silently remap a cross reference to step 1
+        # onto the extracted first rep — but the user's step 1 is the
+        # LOOP, which binds no single row: check the pattern as written
+        _check_cross_refs(
+            {int(p): {int(c[2]) for c in cs}
+             for p, cs in (cross_conds or {}).items()},
+            {j + 1 for j, s in enumerate(step_values)
+             if isinstance(s, LoopStep)},
+            set(optional_steps or ()),
+        )
         inner, shifted = _anchor_loop_args(
             step_values, optional_steps, strict, counts, after_match
         )
+        # a condition on the anchor loop (p == 1) applies to the extracted
+        # first rep AND the residual loop body, so every hop of the user's
+        # loop is tested; cross references shift like their steps
+        for name, conds in (("nav_conds", nav_conds),
+                            ("cross_conds", cross_conds),
+                            ("local_conds", local_conds)):
+            shifted[name] = {
+                q: [(*c[:2], _shift_pos(c[2]), c[3])
+                    if name == "cross_conds" else c for c in cs]
+                for p, cs in (conds or {}).items()
+                for q in ((1, 2) if p == 1 else (_shift_pos(p),))
+            } or None
         out = match_sequence_stream(
             stream,
             [sp0.value, inner, *step_values[1:]],
@@ -2461,28 +2523,6 @@ def match_sequence_stream(
             step_within=step_within,
             ordered=ordered,
             session_gap=session_gap,
-            nav_conds=(
-                {_shift_pos(p): cs for p, cs in nav_conds.items()}
-                if nav_conds
-                else None
-            ),
-            cross_conds=(
-                {_shift_pos(p): [
-                    (ca, cmp_, _shift_pos(j), cb) for ca, cmp_, j, cb in cs
-                ] for p, cs in cross_conds.items()}
-                if cross_conds
-                else None
-            ),
-            local_conds=(
-                # a condition on the anchor loop (p == 1) applies to the
-                # extracted first rep AND the residual loop body — every
-                # hop of the user's loop is re-tested either way
-                {q: cs
-                 for p, cs in local_conds.items()
-                 for q in ((1, 2) if p == 1 else (_shift_pos(p),))}
-                if local_conds
-                else None
-            ),
             **shifted,
         )
         return _anchor_loop_project(out, sp0.name, sp0.bind)
@@ -2534,13 +2574,33 @@ def match_sequence_stream(
                 "an optional step's value(s) must be disjoint from its "
                 "closer's"
             )
-    _NAV_CMP = {
-        "<": lambda a, b: a < b, "<=": lambda a, b: a <= b,
-        ">": lambda a, b: a > b, ">=": lambda a, b: a >= b,
-        "=": lambda a, b: a == b, "<>": lambda a, b: a != b,
-    }
-    nav = {int(p): [tuple(c) for c in cs]
-           for p, cs in (nav_conds or {}).items()}
+    # DEFINE conditions, validated in one pass. nav (PREV navigation):
+    # step p's event.<colA> <cmp> the n-th previous event's <colB>; cross
+    # (the stream twin of the batch CrossPred, MATCH_RECOGNIZE's
+    # last-matched-row running semantics `P AS value > V.value`):
+    # event.<ev_col> <cmp> the <ref_col> value captured when step j bound,
+    # riding the partial's capture slots; local: event.<col> <cmp> a
+    # constant or another column of the same row, nothing captured.
+    # Values are doubles compared through _cmp_ok (NaN/NULL fails).
+    nav, cross, loc = (
+        {int(p): [tuple(c) for c in cs] for p, cs in (given or {}).items()}
+        for given in (nav_conds, cross_conds, local_conds)
+    )
+    aux_set: set = set()
+    for kind, conds in (("nav", nav), ("cross", cross), ("local", loc)):
+        for p, cs in conds.items():
+            if not 1 <= p <= k:
+                raise ValueError(f"{kind}_conds step {p} out of range")
+            for c in cs:
+                if c[1] not in _CMP:
+                    raise ValueError(
+                        f"{kind} comparator {c[1]!r} unsupported (use "
+                        f"{sorted(_CMP)})"
+                    )
+                # the other operand's column: nav's PREV column, cross's
+                # captured column, local's rhs when it names a column
+                rhs = c[3] if kind == "cross" else c[2]
+                aux_set.update((c[0], rhs) if isinstance(rhs, str) else (c[0],))
     if nav:
         if ordered:
             raise ValueError(
@@ -2553,131 +2613,27 @@ def match_sequence_stream(
                 "nav_conds cannot be combined with session_gap (the "
                 "keepalive fast path bypasses per-event classification)"
             )
-        for p, cs in nav.items():
-            if not (1 <= p <= k):
-                raise ValueError(f"nav_conds step {p} out of range")
-            for ca, cmp_, cb, n in cs:
-                if cmp_ not in _NAV_CMP:
-                    raise ValueError(
-                        f"nav comparator {cmp_!r} unsupported (use "
-                        f"{sorted(_NAV_CMP)})"
-                    )
-                if not (1 <= int(n) <= 4):
-                    raise ValueError(
-                        "PREV offset must be 1..4 on the stream path "
-                        "(bounded history in state)"
-                    )
-    nav_cols: list[str] = sorted(
-        {c for cs in nav.values() for cond in cs for c in (cond[0], cond[2])}
+        if not all(1 <= int(c[3]) <= 4 for cs in nav.values() for c in cs):
+            raise ValueError(
+                "PREV offset must be 1..4 on the stream path "
+                "(bounded history in state)"
+            )
+    _check_cross_refs(
+        {p: {int(c[2]) for c in cs} for p, cs in cross.items()}, loops, opt
     )
-    missing_nc = [c for c in nav_cols if c not in stream.columns]
-    if missing_nc:
-        raise ValueError(
-            f"nav column(s) {missing_nc} not in the stream schema"
-        )
-    nav_ci = {c: j for j, c in enumerate(nav_cols)}
-    nav_maxoff = max(
-        (int(cond[3]) for cs in nav.values() for cond in cs), default=0
-    )
-    nav_pos = sorted(nav)  # 1-based steps carrying nav conditions
-    nav_slot0 = {p - 1: s for s, p in enumerate(nav_pos)}
-    # cross-variable DEFINE references (round 8): step p's candidate must
-    # satisfy event.<ev_col> <cmp> <value of ref_col captured when step j
-    # bound> — MATCH_RECOGNIZE's last-matched-row running semantics
-    # (`P AS value > V.value`), the stream twin of the batch CrossPred.
-    # Captured values live in the partial's capture slots; comparisons are
-    # numeric-double with SQL NULL semantics (NaN fails), like nav.
-    cross = {int(p): [tuple(c) for c in cs]
-             for p, cs in (cross_conds or {}).items()}
-    for p_, cs in cross.items():
-        if not (2 <= p_ <= k):
-            raise ValueError(
-                f"cross_conds step {p_} out of range (the anchor cannot "
-                "reference a prior variable — nothing precedes it)"
-            )
-        if p_ in opt or (p_ - 1) in opt:
-            raise ValueError(
-                f"cross_conds step {p_} is optional or the closer of an "
-                "optional — the no-lookahead pending decision has no "
-                "per-candidate cross evaluation (same rule as the batch "
-                "CrossPred)"
-            )
-        if (p_ - 1) in loop0:
-            raise ValueError(
-                f"cross_conds step {p_} is a loop body — iterative "
-                "self-conditions are not supported (same restriction as "
-                "the batch CrossPred); a loop CLOSER may carry one"
-            )
-        for ca, cmp_, j, cb in cs:
-            if cmp_ not in _NAV_CMP:
-                raise ValueError(
-                    f"cross comparator {cmp_!r} unsupported (use "
-                    f"{sorted(_NAV_CMP)})"
-                )
-            j = int(j)
-            if not (1 <= j < p_):
-                raise ValueError(
-                    f"cross_conds step {p_}: referenced step {j} must be "
-                    "bound strictly before it"
-                )
-            if j in opt or (j - 1) in opt or (j - 1) in loop0:
-                raise ValueError(
-                    f"cross_conds step {p_}: referenced step {j} must be "
-                    "a required non-loop step not adjacent to an optional "
-                    "(an optional may be unbound; a loop binds no single "
-                    "row — same rules as the batch CrossPred)"
-                )
-    cap_cols: dict[int, list] = {}
-    for cs in cross.values():
-        for _ca, _cmp, j, cb in cs:
-            cap_cols.setdefault(int(j), set()).add(cb)
-    cap_cols = {j: sorted(v) for j, v in cap_cols.items()}
-    cap_steps = sorted(cap_cols)  # 1-based steps whose payload is captured
-    cap_slot = {j: s for s, j in enumerate(cap_steps)}
-    capcol_idx = {
-        (j, c): i for j in cap_steps for i, c in enumerate(cap_cols[j])
+    loc = {
+        p: [(col, cmp_, rhs if isinstance(rhs, str) else float(rhs))
+            for col, cmp_, rhs in cs]
+        for p, cs in loc.items()
     }
-    cross_cols = sorted(
-        {cond[0] for cs in cross.values() for cond in cs}
-        | {c for v in cap_cols.values() for c in v}
-    )
-    missing_xc = [c for c in cross_cols if c not in stream.columns]
-    if missing_xc:
-        raise ValueError(
-            f"cross column(s) {missing_xc} not in the stream schema"
-        )
-    # row-local constant comparisons (late round 8): step p's candidate
-    # must satisfy event.<col> <cmp> <constant> — nothing captured, so
-    # CEP state is untouched; evaluated inside _okv wherever a
-    # candidate is tested (anchor, plain, optional, loop body, closer)
-    loc: dict[int, list] = {}
-    for p_, cs in (local_conds or {}).items():
-        p_ = int(p_)
-        if not (1 <= p_ <= k):
-            raise ValueError(f"local_conds step {p_} out of range")
-        ent = []
-        for col, cmp_, cst in cs:
-            if cmp_ not in _NAV_CMP:
-                raise ValueError(
-                    f"local comparator {cmp_!r} unsupported (use "
-                    f"{sorted(_NAV_CMP)})"
-                )
-            # rhs: numeric constant, or (col-to-col) a column-name string
-            ent.append((col, cmp_,
-                        cst if isinstance(cst, str) else float(cst)))
-        loc[p_] = ent
-    loc_cols = sorted(
-        {c[0] for cs in loc.values() for c in cs}
-        | {c[2] for cs in loc.values() for c in cs if isinstance(c[2], str)}
-    )
-    missing_lc = [c for c in loc_cols if c not in stream.columns]
-    if missing_lc:
-        raise ValueError(
-            f"local column(s) {missing_lc} not in the stream schema"
-        )
     # shared payload transport: buffered events carry ONE value vector
     # over the union of nav, cross and local columns
-    aux_cols = sorted(set(nav_cols) | set(cross_cols) | set(loc_cols))
+    aux_cols = sorted(aux_set)
+    missing = [c for c in aux_cols if c not in stream.columns]
+    if missing:
+        raise ValueError(
+            f"condition column(s) {missing} not in the stream schema"
+        )
     aux = bool(aux_cols)
     aux_ci = {c: j for j, c in enumerate(aux_cols)}
     if aux:
@@ -2689,12 +2645,27 @@ def match_sequence_stream(
         ]
         if non_num:
             raise ValueError(
-                f"nav/cross column(s) {non_num} are not numeric — the "
+                f"nav/cross/local column(s) {non_num} are not numeric — the "
                 "stream payload transport carries doubles only (compare "
                 "event times via within=/step_within= instead of a ts "
                 "cross reference; the batch path supports ts refs "
                 "directly)"
             )
+    nav_maxoff = max(
+        (int(cond[3]) for cs in nav.values() for cond in cs), default=0
+    )
+    nav_pos = sorted(nav)  # 1-based steps carrying nav conditions
+    nav_slot0 = {p - 1: s for s, p in enumerate(nav_pos)}
+    cap_cols: dict[int, list] = {}
+    for cs in cross.values():
+        for _ca, _cmp, j, cb in cs:
+            cap_cols.setdefault(int(j), set()).add(cb)
+    cap_cols = {j: sorted(v) for j, v in cap_cols.items()}
+    cap_steps = sorted(cap_cols)  # 1-based steps whose payload is captured
+    cap_slot = {j: s for s, j in enumerate(cap_steps)}
+    capcol_idx = {
+        (j, c): i for j in cap_steps for i, c in enumerate(cap_cols[j])
+    }
     for j, ss in enumerate(stepsets):
         if "*" in ss:
             if len(ss) > 1:
@@ -2747,28 +2718,31 @@ def match_sequence_stream(
     has_wild = any("*" in ss for ss in stepsets)
     KEEPALIVE = 255  # buffer sentinel: non-vocabulary event (session/strict)
     gap_ns = pd.Timedelta(session_gap).value if session_gap else None
-    if (gap_ns is not None or strict or nav or has_wild) and len(vocab) >= KEEPALIVE:
+    # buffered admission keeps EVERY event of the key (non-vocabulary ones
+    # as keepalives) when navigation counts every event as a position,
+    # the session/strict modes need every event as keepalive/killer, or
+    # a '*' wildcard step can bind non-vocabulary events
+    keep_all = bool(gap_ns is not None or strict or nav or has_wild)
+    if keep_all and len(vocab) >= KEEPALIVE:
         raise ValueError(
             "session_gap / strict_steps / nav modes support at most 254 "
             "vocabulary values"
         )
 
-    def _okv(vals, j0, typ, flags, cvals=()):
+    def _okv(vals, j0, typ, flags, cvals):
         """Step eligibility: literal vocabulary AND the step's nav
         conditions (precomputed per event at drain time) AND its
-        row-local constant comparisons (``local_conds`` — evaluated on
-        the event's aux value vector; NaN/NULL fails, SQL semantics)."""
+        row-local comparisons (``local_conds`` — evaluated on the event's
+        aux value vector)."""
         if "*" not in vals and (typ is None or typ not in vals):
             return False
-        if j0 in nav_slot0 and not (bool(flags) and flags[nav_slot0[j0]]):
+        if j0 in nav_slot0 and not flags[nav_slot0[j0]]:
             return False
         ls = loc.get(j0 + 1)
         if ls:
-            for col, cmp_, cst in ls:
-                a = cvals[aux_ci[col]] if cvals else float("nan")
-                b = (cvals[aux_ci[cst]] if cvals else float("nan")) \
-                    if isinstance(cst, str) else cst
-                if not (a == a and b == b and _NAV_CMP[cmp_](a, b)):
+            for col, cmp_, rhs in ls:
+                b = cvals[aux_ci[rhs]] if isinstance(rhs, str) else rhs
+                if not _cmp_ok(cmp_, cvals[aux_ci[col]], b):
                     return False
         return True
 
@@ -2779,19 +2753,16 @@ def match_sequence_stream(
     def _okx(j0, tail, cvals):
         """Cross-variable eligibility of step ``j0+1``: the candidate's
         payload vs the partial's captured prior-step values (``tail[-1]``
-        is the caps slot — guaranteed last when cross is active). NaN on
-        either side fails, SQL NULL semantics."""
+        is the caps slot — guaranteed last when cross is active)."""
         cs = cross.get(j0 + 1)
         if not cs:
             return True
         caps = tail[-1]
         for ca, cmp_, j, cb in cs:
             ref = caps[cap_slot[j]]
-            if ref is None:
-                return False
-            a = cvals[aux_ci[ca]]
-            b = ref[capcol_idx[(j, cb)]]
-            if not (a == a and b == b and _NAV_CMP[cmp_](a, b)):
+            if ref is None or not _cmp_ok(
+                cmp_, cvals[aux_ci[ca]], ref[capcol_idx[(j, cb)]]
+            ):
                 return False
         return True
     # plain-tuple copies for the executor closures: CountBetween.pred is
@@ -2911,14 +2882,13 @@ def match_sequence_stream(
         _complete(q, p[1] + 1, rows, key_val, q[3], sess_ord)
 
     def _process(partials, events, rows, key_val, last_end=None, sess=None):
-        """Advance the machine over (t, i, typ) tuples in (ts, id) order;
+        """Advance the machine over ``(ts, id, type, nav flags, payload
+        values)`` events in (ts, id) order (flags and values are empty
+        tuples when the pattern has no nav or no payload);
         returns (partials, last_end, sess) where last_end is the final
         (ts, id) of the last EMITTED match (skip_past_last bookkeeping)
         and sess is session-gap mode's [last_event_ts, ordinal] cursor."""
-        for ev in events:
-            t, i, typ = ev[0], ev[1], ev[2]
-            flags = ev[3] if len(ev) > 3 else ()
-            cvals = ev[4] if len(ev) > 4 else ()
+        for t, i, typ, flags, cvals in events:
             if gap_ns is not None:
                 # gap sessionization: ANY event keeps the session alive;
                 # a gap > session_gap kills every in-flight partial (the
@@ -3169,10 +3139,9 @@ def match_sequence_stream(
         )
         _check_shape(partials)
         rows: list = []
-        if cross or loc:
-            # ordered mode carries the cross/local payload transiently
-            # (events are never buffered): flags empty, values at ev[4]
-            events = [(t, i, ty, (), vals) for t, i, ty, vals in events]
+        # ordered mode has no nav flags and reads the cross/local payload
+        # transiently (events are never buffered)
+        events = [(t, i, ty, (), v[0] if v else ()) for t, i, ty, *v in events]
         partials, last_end, _ = _process(
             partials, events, rows, key_val, last_end
         )
@@ -3196,38 +3165,13 @@ def match_sequence_stream(
             partials, buffer, tail, last_end, sess = [], [], [], None, None
         wm_ms = state.getCurrentWatermarkMs()
         wm_ns = wm_ms * 1_000_000
-        if aux:
-            # navigation counts EVERY event of the key as a position
-            # (the batch twin's lag() over the whole partition),
-            # session/strict modes need every event as keepalive/killer,
-            # and a '*' wildcard step can bind NON-vocabulary events —
-            # all types transit the buffer, carrying the aux (nav+cross)
-            # column values; cross alone needs only vocabulary events
-            if nav or gap_ns is not None or strict or has_wild:
-                buffer.extend(
-                    (t, i, vidx.get(typ, KEEPALIVE), vals)
-                    for t, i, typ, vals in events
-                )
-            else:
-                buffer.extend(
-                    (t, i, vidx[typ], vals)
-                    for t, i, typ, vals in events
-                    if typ in vidx
-                )
-        elif gap_ns is not None or strict:
-            # session mode: EVERY event keeps the session alive; strict
-            # mode: every event can kill a waiting strict partial — all
-            # types transit the buffer (non-vocabulary as keepalives)
-            buffer.extend(
-                (t, i, vidx.get(typ, KEEPALIVE))
-                for t, i, typ in events
-            )
-        else:
-            buffer.extend(
-                (t, i, vidx[typ])
-                for t, i, typ in events
-                if typ in vidx
-            )
+        # vocabulary events (every event under keep_all), each with its
+        # payload values when the pattern has any
+        buffer.extend(
+            (t, i, vidx.get(typ, KEEPALIVE), *vals)
+            for t, i, typ, *vals in events
+            if keep_all or typ in vidx
+        )
         buffer.sort(key=lambda e: (e[0], e[1]))
         # watermark finality: only events strictly older than the watermark
         # can no longer be preceded by a straggler — process those, keep the
@@ -3243,26 +3187,16 @@ def match_sequence_stream(
             for t, i, v, vals in buffer:
                 if t >= wm_ns:
                     break
-                fl = []
-                for p_ in nav_pos:
-                    ok = True
-                    for ca, cmp_, cb, n in nav[p_]:
-                        if len(tail) < n:
-                            ok = False
-                            break
-                        a = vals[aux_ci[ca]]
-                        b = tail[-n][aux_ci[cb]]
-                        if not (a == a and b == b
-                                and _NAV_CMP[cmp_](a, b)):
-                            ok = False
-                            break
-                    fl.append(ok)
-                typ_ = vocab[v] if v != KEEPALIVE else None
-                ready.append(
-                    (t, i, typ_, tuple(fl), vals)
-                    if cross or loc
-                    else (t, i, typ_, tuple(fl))
+                fl = tuple(
+                    all(
+                        len(tail) >= n
+                        and _cmp_ok(cmp_, vals[aux_ci[ca]], tail[-n][aux_ci[cb]])
+                        for ca, cmp_, cb, n in nav[p_]
+                    )
+                    for p_ in nav_pos
                 )
+                typ_ = vocab[v] if v != KEEPALIVE else None
+                ready.append((t, i, typ_, fl, vals))
                 if nav_maxoff:
                     tail.append(list(vals))
                     if len(tail) > nav_maxoff:
@@ -3270,7 +3204,7 @@ def match_sequence_stream(
             buffer = buffer[len(ready):]
         else:
             ready = [
-                (t, i, vocab[v] if v != KEEPALIVE else None)
+                (t, i, vocab[v] if v != KEEPALIVE else None, (), ())
                 for t, i, v in buffer
                 if t < wm_ns
             ]

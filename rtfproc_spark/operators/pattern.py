@@ -1656,10 +1656,6 @@ def match_recognize_sql(
                     F.col(type_col).isin(*val) if isinstance(val, tuple)
                     else F.col(type_col) == val
                 )
-            _LCMP = {
-                "<": "<", "<=": "<=", ">": ">", ">=": ">=",
-                "=": "=", "<>": "!=",
-            }
             svars = spec["step_vars"][0]
             if len(svars) > 1 and any(v1 in stream_localmap for v1 in svars):
                 raise ValueError(
@@ -1669,7 +1665,7 @@ def match_recognize_sql(
             for v1 in svars:
                 for col, cmp_, cst in stream_localmap.get(v1, []):
                     rhs = cst if isinstance(cst, str) else repr(cst)
-                    cond = cond & F.expr(f"{col} {_LCMP[cmp_]} {rhs}")
+                    cond = cond & F.expr(f"{col} {cmp_} {rhs}")
             cols = [
                 F.col(time_col).alias("ts_1"), F.col(id_col).alias("id_1"),
             ]
@@ -1688,55 +1684,43 @@ def match_recognize_sql(
                 .select(*key_cols, *cols)
             )
         else:
-            nav_conds: dict[int, list] = {}
-            for v, conds in stream_navmap.items():
-                if v not in varmap:
-                    continue  # defined but unused in the pattern
-                pos_v, _is_loop_v, name_v = varmap[v]
-                if name_v != v.lower():
-                    raise ValueError(
-                        f"streaming DEFINE {v}: PREV navigation on an "
-                        "alternation branch is not supported (per-branch "
-                        "flags would be ambiguous)"
-                    )
-                nav_conds.setdefault(pos_v, []).extend(conds)
-            local_conds: dict[int, list] = {}
-            for v, conds in stream_localmap.items():
-                if v not in varmap:
-                    continue  # defined but unused in the pattern
-                pos_v, _is_loop_v, name_v = varmap[v]
-                if name_v != v.lower():
-                    raise ValueError(
-                        f"streaming DEFINE {v}: a constant comparison on "
-                        "an alternation branch is not supported"
-                    )
-                local_conds.setdefault(pos_v, []).extend(conds)
-            cross_conds: dict[int, list] = {}
-            for v, conds in stream_crossmap.items():
-                if v not in varmap:
-                    continue  # defined but unused in the pattern
-                pos_v, _is_loop_v, name_v = varmap[v]
-                if name_v != v.lower():
-                    raise ValueError(
-                        f"streaming DEFINE {v}: a cross-variable reference "
-                        "on an alternation branch is not supported"
-                    )
-                for ca, cmp_, ref_v, cb in conds:
-                    if ref_v not in varmap:
+            # each kind's DEFINE conditions keyed by step position; a
+            # cross condition's referenced variable becomes its position
+            by_pos: dict[str, dict[int, list]] = {}
+            for kind, vmap, what in (
+                ("nav", stream_navmap, "PREV navigation"),
+                ("local", stream_localmap, "a constant comparison"),
+                ("cross", stream_crossmap, "a cross-variable reference"),
+            ):
+                out = by_pos.setdefault(kind, {})
+                for v, conds in vmap.items():
+                    if v not in varmap:
+                        continue  # defined but unused in the pattern
+                    pos_v, _is_loop_v, name_v = varmap[v]
+                    if name_v != v.lower():
                         raise ValueError(
-                            f"streaming DEFINE {v}: referenced variable "
-                            f"{ref_v} does not appear in the pattern"
+                            f"streaming DEFINE {v}: {what} on an "
+                            "alternation branch is not supported"
                         )
-                    ref_pos, _ref_is_loop, ref_name = varmap[ref_v]
-                    if ref_name != ref_v.lower():
-                        raise ValueError(
-                            f"streaming DEFINE {v}: referencing an "
-                            f"alternation-branch variable {ref_v} is not "
-                            "supported (the branch may not have bound)"
-                        )
-                    cross_conds.setdefault(pos_v, []).append(
-                        (ca, cmp_, ref_pos, cb)
-                    )
+                    for c in conds:
+                        if kind == "cross":
+                            ref_v = c[2]
+                            if ref_v not in varmap:
+                                raise ValueError(
+                                    f"streaming DEFINE {v}: referenced "
+                                    f"variable {ref_v} does not appear in "
+                                    "the pattern"
+                                )
+                            ref_pos, _ref_is_loop, ref_name = varmap[ref_v]
+                            if ref_name != ref_v.lower():
+                                raise ValueError(
+                                    f"streaming DEFINE {v}: referencing an "
+                                    f"alternation-branch variable {ref_v} "
+                                    "is not supported (the branch may not "
+                                    "have bound)"
+                                )
+                            c = (c[0], c[1], ref_pos, c[3])
+                        out.setdefault(pos_v, []).append(c)
             matched = match_sequence_stream(
                 df,
                 spec["steps"],
@@ -1749,9 +1733,9 @@ def match_recognize_sql(
                 id_col=id_col,
                 optional_steps=spec["optional_steps"],
                 strict_steps=spec["strict_steps"],
-                nav_conds=nav_conds or None,
-                cross_conds=cross_conds or None,
-                local_conds=local_conds or None,
+                nav_conds=by_pos["nav"] or None,
+                cross_conds=by_pos["cross"] or None,
+                local_conds=by_pos["local"] or None,
                 **kwargs,
             )
     else:

@@ -44,7 +44,7 @@ trade; everything below the cap is chopping-invariant).
 
 Exactly-once: both the output and the index publish per micro-batch into
 ``batch_id=N`` subdirectories via write-then-atomic-rename (the
-IdempotentSink pattern) — a replayed batch overwrites its own directory,
+IdempotentSink's ``_publish``) — a replayed batch overwrites its own directory,
 and the index read EXCLUDES the current batch id, so a replay cannot see
 its own half-published rows and self-match.
 
@@ -68,6 +68,7 @@ from rtfproc_spark.functions.dedup import (
     minhash_signature,
     word_ngrams,
 )
+from rtfproc_spark.streaming.sink import _publish
 
 INDEX_SCHEMA = "bucket long, id long, sig array<bigint>"
 
@@ -112,16 +113,6 @@ def _sig_agree(a, b):
         F.lit(0),
         lambda acc, v: acc + v,
     )
-
-
-def _publish(df: DataFrame, base: str, batch_id: int) -> None:
-    """Write-then-rename per-batch publish (idempotent under replay)."""
-    final = os.path.join(base, f"batch_id={batch_id}")
-    tmp = os.path.join(base, f"_tmp_batch_{batch_id}")
-    shutil.rmtree(tmp, ignore_errors=True)
-    df.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(final, ignore_errors=True)
-    os.replace(tmp, final)
 
 
 def _recover_compaction(index_dir: str) -> None:

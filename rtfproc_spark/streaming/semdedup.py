@@ -65,11 +65,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rtfproc_spark.streaming.dedup import (
-    _publish,
     _read_index,
     _sequential_survivors,
     compact_index,
 )
+from rtfproc_spark.streaming.sink import _publish
 
 # the norm is STORED with the vector (computed once at keep time via the
 # same `_norm` fold the comparisons use) so the vs-index candidate filter

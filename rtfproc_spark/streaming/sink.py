@@ -37,6 +37,20 @@ def _hashable(dt) -> bool:
     return True
 
 
+def _publish(df: DataFrame, base: str, batch_id: int) -> str:
+    """Write-then-rename per-batch publish: ``df`` goes to
+    ``_tmp_batch_N`` and is renamed to ``batch_id=N``, replacing the
+    directory a replayed batch N left (idempotent under replay). Returns
+    the published directory."""
+    final = os.path.join(base, f"batch_id={batch_id}")
+    tmp = os.path.join(base, f"_tmp_batch_{batch_id}")
+    shutil.rmtree(tmp, ignore_errors=True)
+    df.write.mode("overwrite").parquet(tmp)
+    shutil.rmtree(final, ignore_errors=True)
+    os.replace(tmp, final)
+    return final
+
+
 @dataclass
 class IdempotentSink:
     path: str
@@ -45,13 +59,7 @@ class IdempotentSink:
 
     def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.monotonic()
-        final_dir = os.path.join(self.path, f"batch_id={batch_id}")
-        tmp_dir = os.path.join(self.path, f"_tmp_batch_{batch_id}")
-        batch_df.write.mode("overwrite").parquet(tmp_dir)
-        if os.path.exists(final_dir):
-            shutil.rmtree(final_dir)  # replayed batch: overwrite, idempotent
-        os.replace(tmp_dir, final_dir)
-        n = _count_parquet_rows(final_dir)
+        n = _count_parquet_rows(_publish(batch_df, self.path, batch_id))
         m = {
             "batch_id": batch_id,
             "rows": n,

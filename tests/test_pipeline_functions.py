@@ -165,61 +165,6 @@ def test_connected_components_hypothesis_differential(spark):
     check()
 
 
-def test_connected_components_star_differential_and_round_budget(spark):
-    """Large-star/small-star variant: (1) random graphs must agree with a
-    brute-force union-find (same differential as the min-label version);
-    (2) the point of the algorithm — a LONG CHAIN converges in O(log^2 n)
-    rounds: a 120-node chain (diameter 119) must finish within 12 rounds,
-    where min-label propagation would need ~119."""
-    import random
-
-    from rtfproc_spark.functions.dedup import connected_components_star
-
-    rng = random.Random(11)
-
-    def unionfind(edges):
-        parent = {}
-
-        def find(x):
-            while parent.get(x, x) != x:
-                parent[x] = parent.get(parent[x], parent[x])
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        nodes = {n for e in edges for n in e}
-        groups = {}
-        for n in nodes:
-            groups.setdefault(find(n), []).append(n)
-        return {n: min(ms) for ms in groups.values() for n in ms}
-
-    for _ in range(3):
-        edges = [
-            (rng.randrange(30), rng.randrange(30)) for _ in range(rng.randrange(5, 25))
-        ]
-        edges = [(a, b) for a, b in edges if a != b]
-        if not edges:
-            continue
-        df = spark.createDataFrame(edges, "id_a long, id_b long")
-        got = {
-            r["id"]: r["component"]
-            for r in connected_components_star(df).collect()
-        }
-        assert got == unionfind(edges)
-
-    chain = [(i, i + 1) for i in range(120)]
-    rng.shuffle(chain)
-    df = spark.createDataFrame(chain, "id_a long, id_b long")
-    got = {
-        r["id"]: r["component"]
-        for r in connected_components_star(df, max_iters=12).collect()
-    }
-    assert got == {i: 0 for i in range(121)}
-
-
 def test_pack_bins_edges(spark):
     """Running-total packing edge cases: a document larger than the budget
     gets its own bin (and pushes the next doc onward, exactly like a

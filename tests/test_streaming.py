@@ -1040,6 +1040,9 @@ def test_loop_step_validation_and_codec_v5(spark):
         ([B, lp, B], {"step_within": "1 minute"}, "step_within"),
         ([B, lp, B], {"counts": [cb_loop]}, "non-loop steps"),
         ([B, lp, B], {"optional_steps": {5}}, "out of range"),
+        # an anchor loop's bounds are checked as written, not desugared
+        ([LoopStep(pred=B, value="B", name="b", max_n=0), B], {},
+         r"step 1: LoopStep max_n \(0\) < min_n \(1\)"),
     ]:
         with pytest.raises(ValueError, match=err):
             match_sequence(df, steps, ["user_id"], **kw)
@@ -1077,6 +1080,56 @@ def test_loop_step_validation_and_codec_v5(spark):
     blob4 = encode_partials(no_loops)
     assert blob4[1] == 0
     assert decode_state(blob4)[0] == no_loops
+
+
+def test_cross_ref_rules_both_twins(spark):
+    """Each cross-reference rule raises the same targeted error on both
+    twins: every row runs as a batch CrossPred at step p reading step j's
+    value, and as the stream's cross_conds={p: [(value, >, j, value)]}.
+    The input is an empty DataFrame and no query starts."""
+    import pytest
+
+    from rtfproc_spark.operators.cep import (
+        CrossPred,
+        LoopStep,
+        match_sequence,
+        match_sequence_stream,
+    )
+
+    df = spark.createDataFrame(
+        [],
+        "event_id long, user_id long, event_type string, ts timestamp, "
+        "value double",
+    )
+    lp = LoopStep(pred=F.col("event_type") == "B", value="B", name="b")
+    # (steps, optional_steps, conditioned step p, referenced step j, error);
+    # a letter is a plain step, its batch predicate event_type == letter
+    for steps, opt, p, j, err in [
+        ("ABC", None, 1, 1, "the anchor cannot be a CrossPred"),
+        ("ABCD", {2}, 2, 1, "step 2 is optional or the closer"),
+        ("ABCD", {2}, 3, 1, "step 3 is optional or the closer"),
+        ("ABC", None, 2, 3, "referenced step 3 is not a PRIOR step"),
+        (["A", lp, "C", "D"], None, 4, 2, "referenced step 2 is a Kleene loop"),
+        ("ABCD", {2}, 4, 2, "referenced step 2 is optional or an optional's"),
+        ("ABCD", {2}, 4, 3, "referenced step 3 is optional or an optional's"),
+    ]:
+        batch = [
+            F.col("event_type") == s if isinstance(s, str) else s
+            for s in steps
+        ]
+        batch[p - 1] = CrossPred(
+            pred=F.col("_ev_value") > F.col(f"_def_{j}_value"),
+            needs=((j, "value"),),
+            ev_cols=("value",),
+            local=batch[p - 1],
+        )
+        with pytest.raises(ValueError, match=err):
+            match_sequence(df, batch, ["user_id"], optional_steps=opt)
+        with pytest.raises(ValueError, match=err):
+            match_sequence_stream(
+                df, list(steps), optional_steps=opt,
+                cross_conds={p: [("value", ">", j, "value")]},
+            )
 
 
 def test_match_sequence_stream_reserved_suffix_names(spark, tmp_path):
@@ -3833,6 +3886,16 @@ def test_stream_nav_codec_and_errors(spark):
         )
     with _pytest.raises(ValueError, match="wildcard value needs a nav"):
         match_sequence_stream(stream, ["a", "*"], ordered=False)
+    # a nav condition on an ANCHOR-position loop reaches every hop, so the
+    # type-free D+ builds: its residual loop body carries the condition too
+    match_recognize_sql(stream, """
+        MATCH_RECOGNIZE (
+          PARTITION BY user_id ORDER BY ts
+          PATTERN (D+ U)
+          WITHIN INTERVAL '10' MINUTE
+          DEFINE D AS value < PREV(value),
+                 U AS value >= PREV(value)
+        )""", ordered=False)
     with _pytest.raises(ValueError, match="NEXT navigation is batch-only"):
         match_recognize_sql(stream, """
             MATCH_RECOGNIZE (
