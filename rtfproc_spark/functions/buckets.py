@@ -26,60 +26,22 @@ from pyspark.sql import functions as F
 _LIVE: list[DataFrame] = []
 
 
-class PersistScope:
-    """A caller-owned persistence registry: ``release()`` unpersists ONLY
-    the DataFrames tracked through this scope, so concurrent queries (or a
-    drain interleaved with a still-lazy consumer) cannot unpersist each
-    other's intermediates — the failure mode of a process-global registry.
-
-    Usage: pass ``scope=PersistScope()`` into a candidate generator,
-    MATERIALIZE the result (count/write/collect — the cached intermediates
-    are consumed lazily), then ``scope.release()``. As a context manager the
-    scope releases on exit, so only wrap the materialization itself."""
-
-    def __init__(self) -> None:
-        self._dfs: list[DataFrame] = []
-
-    def track(self, df: DataFrame) -> DataFrame:
-        self._dfs.append(df)
-        return df
-
-    def release(self) -> int:
-        n = 0
-        while self._dfs:
-            df = self._dfs.pop()
-            try:
-                df.unpersist()
-                n += 1
-            except Exception:
-                pass
-        return n
-
-    def __enter__(self) -> "PersistScope":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.release()
-
-
 def persist_tracked(
     df: DataFrame,
     level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
-    scope: PersistScope | None = None,
 ) -> DataFrame:
-    """persist() + register for later release. With ``scope`` the handle is
-    owned by that scope alone; without it the process-global registry is
-    used (drained by ``release_persisted()`` — fine for single-query
-    sessions and the bench's between-queries drain, unsafe for concurrent
-    queries, which should each pass their own scope)."""
+    """persist() + register in the process-global registry, drained by
+    ``release_persisted()`` (single-query sessions and the bench's
+    between-queries drain; concurrent queries in one session would drain
+    each other's intermediates)."""
     df = df.persist(level)
-    (scope._dfs if scope is not None else _LIVE).append(df)
+    _LIVE.append(df)
     return df
 
 
 def release_persisted() -> int:
     """Drain the GLOBAL registry: unpersist every intermediate persisted via
-    persist_tracked(scope=None) since the last drain. Call after the
+    persist_tracked since the last drain. Call after the
     consuming DataFrame is materialized."""
     n = 0
     while _LIVE:

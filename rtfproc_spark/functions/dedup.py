@@ -84,7 +84,6 @@ def minhash_candidates(
     bands: int = 4,
     max_bucket: int = 200,
     persist: bool = True,
-    scope=None,
 ) -> DataFrame:
     """LSH candidate pairs (id_a < id_b) sharing at least one band bucket,
     with exact n-gram Jaccard verification attached.
@@ -97,12 +96,9 @@ def minhash_candidates(
     those and are caught by exact_dedup_groups.
 
     ``persist=True`` caches the shingle table (it feeds the signature stage
-    AND both verification joins); long-lived sessions should pass a
-    ``scope`` (``buckets.PersistScope``) and call ``scope.release()`` after
-    materializing the result — the scope owns only THIS call's caches, so
-    concurrent queries cannot drain each other. Without a scope the global
-    ``buckets.release_persisted()`` drain applies; ``persist=False`` trades
-    one extra shingle pass for zero cached state.
+    AND both verification joins); long-lived sessions release it with
+    ``buckets.release_persisted()`` after materializing the result;
+    ``persist=False`` trades one extra shingle pass for zero cached state.
     """
     from rtfproc_spark.functions.buckets import (
         ensure_scan_parallelism,
@@ -122,7 +118,7 @@ def minhash_candidates(
     # run instead of three times (at 100 TB this is a staged intermediate
     # table; MEMORY_AND_DISK is the single-job analogue).
     if persist:
-        base = persist_tracked(base, scope=scope)
+        base = persist_tracked(base)
     # minhashes via array_min(transform(...)) straight over the cached
     # shingle arrays: ZERO shuffle — the explode+groupBy alternative moves
     # every (id, shingle) pair through an exchange, which at corpus scale is
@@ -512,7 +508,6 @@ def simhash_near_pairs(
     blocks: int = 4,
     max_bucket: int = 1000,
     persist: bool = True,
-    scope=None,
 ) -> DataFrame:
     """SimHash near-dup pairs via the block-permutation trick: split the
     64-bit signature into ``blocks`` chunks — any pair within hamming
@@ -554,7 +549,7 @@ def simhash_near_pairs(
     # and both self-join sides all consume the UDF output — caching the raw
     # chunk table means the SimHash UDF runs exactly once
     if persist:
-        chunks = persist_tracked(chunks, scope=scope)
+        chunks = persist_tracked(chunks)
     chunks = prune_degenerate_buckets(chunks, ["block_idx", "block_val"], max_bucket)
     a, b = chunks.alias("a"), chunks.alias("b")
     pairs = (

@@ -162,7 +162,6 @@ def all_pairs_near(
     dim: int | None = None,
     max_bucket: int = 1000,
     persist: bool = True,
-    scope=None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via multi-band hyperplane LSH.
 
@@ -188,7 +187,7 @@ def all_pairs_near(
     # repeated UDF passes for zero cached state.
     banded = _banded(df, vec_col, id_col, dim, bands, bits, seed)
     if persist:
-        banded = persist_tracked(banded, scope=scope)
+        banded = persist_tracked(banded)
     pruned = prune_degenerate_buckets(banded, ["band_idx", "bucket"], max_bucket)
     a, b = pruned.alias("a"), pruned.alias("b")
     pairs = (

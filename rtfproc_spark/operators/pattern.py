@@ -682,6 +682,24 @@ def _rewrite_measure(
 _NAV_OPEN = re.compile(r"\b(PREV|NEXT)\s*\(", flags=re.IGNORECASE)
 
 
+def _mask_literals(expr: str):
+    """Replace each quoted literal (``''`` escapes included) with a
+    ``\x00<i>\x00`` token, so scans for parentheses, ``AND``,
+    ``PREV(``/``NEXT(`` and ``VAR.col`` never look inside one. Returns the
+    masked string and a function restoring the literals in any piece of
+    it."""
+    lits: list[str] = []
+
+    def _mask(m: re.Match) -> str:
+        lits.append(m.group(0))
+        return f"\x00{len(lits) - 1}\x00"
+
+    def unmask(s: str) -> str:
+        return re.sub(r"\x00(\d+)\x00", lambda m: lits[int(m.group(1))], s)
+
+    return re.sub(r"'(?:[^']|'')*'", _mask, expr), unmask
+
+
 def _strip_var_quals(expr: str, variables: set[str]) -> str:
     """Rewrite ``VAR.col`` -> ``col`` for pattern variables (used inside
     PREV/NEXT, where the navigated row serves every variable reference);
@@ -711,6 +729,7 @@ def _lower_define_nav(
     last-matched-row running reference) is masked with a ``__cross__``
     token, lowered to a :class:`~rtfproc_spark.operators.cep.CrossPred`
     once the pattern parse has fixed step positions."""
+    expr, unmask = _mask_literals(expr)
     out: list[str] = []
     pos = 0
     while True:
@@ -743,9 +762,9 @@ def _lower_define_nav(
         elif len(parts) != 1:
             raise ValueError(
                 f"{kind.upper()} takes (expr[, integer offset]) — got "
-                f"({inner})"
+                f"({unmask(inner)})"
             )
-        norm = " ".join(_strip_var_quals(inner, variables).split())
+        norm = unmask(" ".join(_strip_var_quals(inner, variables).split()))
         gen = nav.setdefault((kind, norm, n), f"__nav_{kind}{n}_{len(nav)}")
         out.append(gen)
         pos = i
@@ -762,7 +781,7 @@ def _lower_define_nav(
             return f"__cross__{v}__dot__{col}"
         return col
 
-    return re.sub(r"\b(\w+)\s*\.\s*(\w+)", _q, res)
+    return unmask(re.sub(r"\b(\w+)\s*\.\s*(\w+)", _q, res))
 
 
 _CROSS_TOKEN = re.compile(r"__cross__(\w+)__dot__(\w+)")
@@ -818,13 +837,7 @@ def _build_cross_pred(
       kept for the variable-free part of the DEFINE)."""
     from .cep import CrossPred
 
-    lits: list[str] = []
-
-    def _mask(m: re.Match) -> str:
-        lits.append(m.group(0))
-        return f"\x00{len(lits) - 1}\x00"
-
-    masked = re.sub(r"'(?:[^']|'')*'", _mask, expr)
+    masked, unmask = _mask_literals(expr)
     # FIRST/LAST over a single-row prior variable is the variable's row
     masked = re.sub(
         r"\b(?:FIRST|LAST)\s*\(\s*(__cross__\w+__dot__\w+)\s*\)",
@@ -891,16 +904,13 @@ def _build_cross_pred(
         c = re.sub(r"(?<![.\w])[A-Za-z_]\w*\b(?!\s*\()", _esub, c)
         cross_parts.append(c)
 
-    def _unmask(s: str) -> str:
-        return re.sub(r"\x00(\d+)\x00", lambda m: lits[int(m.group(1))], s)
-
     from pyspark.sql import functions as F
 
     if not cross_parts:  # defensive — caller only routes cross exprs here
         raise ValueError(f"DEFINE {var}: no cross-variable conjunct found")
-    pred = F.expr(_unmask(" AND ".join(f"({p})" for p in cross_parts)))
+    pred = F.expr(unmask(" AND ".join(f"({p})" for p in cross_parts)))
     local = (
-        F.expr(_unmask(" AND ".join(f"({p})" for p in local_parts)))
+        F.expr(unmask(" AND ".join(f"({p})" for p in local_parts)))
         if local_parts else None
     )
     return CrossPred(
@@ -997,23 +1007,21 @@ def _lower_stream_define(
     navmap: dict[str, list] = {}
     crossmap: dict[str, list] = {}
     localmap: dict[str, list] = {}
-    for var, expr in raw.items():
+    # literals masked first: a literal containing ' AND ' (event_type =
+    # 'a AND b', or such a value in an IN list) must not split
+    # mid-string, nor one reading 'NEXT(1)' trip the NEXT probe
+    masked = {var: _mask_literals(expr) for var, expr in raw.items()}
+    if any(re.search(r"\bNEXT\s*\(", m, flags=re.IGNORECASE)
+           for m, _ in masked.values()):
+        raise ValueError(
+            "NEXT navigation is batch-only — lead() over an unbounded "
+            "stream has no append-mode expression (PREV IS supported "
+            "on the buffered ordered=False path)"
+        )
+    for var, (expr, unmask) in masked.items():
         lit_val: str | tuple | None = None
-        # _split_top_and's contract requires string literals pre-masked
-        # (same \x00-index trick as _build_cross_pred): a literal
-        # containing ' AND ' — event_type = 'a AND b', or such a value
-        # in an IN list — must not be split mid-string
-        lits: list[str] = []
-
-        def _mask(m: re.Match, lits=lits) -> str:
-            lits.append(m.group(0))
-            return f"\x00{len(lits) - 1}\x00"
-
-        masked = re.sub(r"'(?:[^']|'')*'", _mask, expr)
-        for conj in _split_top_and(masked):
-            conj = re.sub(
-                r"\x00(\d+)\x00", lambda m: lits[int(m.group(1))], conj
-            )
+        for conj in _split_top_and(expr):
+            conj = unmask(conj)
             lm = _STREAM_LOCAL.fullmatch(conj)
             l_flip = None
             if lm is None:
@@ -1283,13 +1291,6 @@ def match_recognize_sql(
                 "ALL ROWS PER MATCH is batch-only (the expansion joins "
                 "back to the input — a stream-stream join the append-mode "
                 "matcher output cannot feed)"
-            )
-        if any(re.search(r"\bNEXT\s*\(", e, flags=re.IGNORECASE)
-               for e in raw_define.values()):
-            raise ValueError(
-                "NEXT navigation is batch-only — lead() over an unbounded "
-                "stream has no append-mode expression (PREV IS supported "
-                "on the buffered ordered=False path)"
             )
         type_col, define, stream_navmap, stream_crossmap, stream_localmap \
             = _lower_stream_define(raw_define)

@@ -24,6 +24,12 @@ Semantics (deterministic, replayable, SEQUENTIAL):
 - survivors are appended to the output and their (bucket, id, signature)
   rows to the index.
 
+One step, two paths: the sequence below the signature math — group guard,
+vs-index join, in-batch pairs, sequential survivors, publishes — is
+``_keep_against_index``, which the semantic path
+(:mod:`rtfproc_spark.streaming.semdedup`, IVF clusters as the groups)
+runs too; both ``stream_*`` functions share one foreachBatch wiring.
+
 Degenerate buckets (the 100 TB guard): a band bucket holding more than
 ``max_bucket`` members (index rows + this batch's docs combined) is
 boilerplate territory — candidate generation against it would go
@@ -88,7 +94,8 @@ def _sig_frame(
     num_hashes: int,
     bands: int,
 ) -> DataFrame:
-    """(id, sig, buckets[]) for each doc — all JVM-side expressions."""
+    """(id, sig, groups[]) for each doc, ``groups`` its band buckets —
+    all JVM-side expressions."""
     # word_ngrams normalizes internally (lower + trim + \s+ split)
     shingles = F.array_distinct(word_ngrams(F.col(text_col), ngram))
     sig = minhash_signature(shingles, num_hashes)
@@ -99,7 +106,7 @@ def _sig_frame(
         F.col(id_col).alias("id"),
         sig.alias("sig"),
     ).withColumn(
-        "buckets",
+        "groups",
         F.array_distinct(
             minhash_bands(F.col("sig"), bands, num_hashes // bands)
         ),
@@ -148,7 +155,7 @@ def _read_index(
     spark: SparkSession,
     index_dir: str,
     before_batch: int,
-    schema: str = INDEX_SCHEMA,
+    schema: str,
 ) -> DataFrame:
     _recover_compaction(index_dir)
     dirs = [
@@ -218,6 +225,117 @@ def _sequential_survivors(stage1: DataFrame, edges: DataFrame) -> DataFrame:
     )
 
 
+def _keep_against_index(
+    spark: SparkSession,
+    batch_df: DataFrame,
+    batch_id: int,
+    index_dir: str,
+    out_dir: str,
+    id_col: str,
+    present: F.Column,
+    docs_of,
+    schema: str,
+    group: str,
+    cap: int,
+    match,
+) -> None:
+    """One micro-batch of a keep-against-index near-dedup — the one step
+    both streaming dedups run (text: LSH band buckets; semantic: IVF
+    clusters). Rows failing ``present`` bypass it: kept, never indexed.
+    ``docs_of`` maps the present rows to one row per document: ``id``, a
+    ``groups`` array (the candidate groups the document joins) and the
+    payload columns the index stores under ``schema`` besides ``group``
+    and ``id``. ``match(a, b)`` builds the pair rule from two column
+    accessors (``a("sig")`` is the first document's ``sig``).
+
+    Sequence: degenerate-group guard over batch + index population, drop
+    documents matching the index, the in-batch sequential rule over the
+    matched pairs (``_sequential_survivors``), then publish the output and
+    the survivors' index rows for their non-degenerate groups."""
+    par = spark.sparkContext.defaultParallelism
+    held: list[DataFrame] = []
+
+    def hold(df: DataFrame) -> DataFrame:
+        held.append(df.persist())
+        return held[-1]
+
+    def a(c: str) -> F.Column:
+        return F.col(f"a.{c}")
+
+    def b(c: str) -> F.Column:
+        return F.col(f"b.{c}")
+
+    try:
+        # materialize the per-document frame ONCE per batch: it feeds the
+        # guard, the index join, both pair sides and the index append —
+        # as lineage each consumer would re-run the signature hashes or
+        # the assignment UDF (measured 9x slower on the sf0.1 smoke)
+        docs = hold(docs_of(batch_df.filter(present).repartition(par)))
+        index = _read_index(spark, index_dir, batch_id, schema)
+        payload = [c for c in index.columns if c not in (group, "id")]
+        members = docs.select("id", *payload, F.explode("groups").alias(group))
+        # degenerate-group guard (see module docstring): combined
+        # index+batch population above the cap -> the group is out of
+        # candidate generation for this batch and out of the index
+        # append. One row per OVERFULL group — broadcast anti-joins.
+        pop = (
+            members.groupBy(group)
+            .agg(F.count(F.lit(1)).alias("_nb"))
+            .join(
+                index.groupBy(group).agg(F.count(F.lit(1)).alias("_ni")),
+                group,
+                "full_outer",
+            )
+            .select(
+                group,
+                (F.coalesce("_nb", F.lit(0)) + F.coalesce("_ni", F.lit(0))).alias("_n"),
+            )
+        )
+        degenerate = F.broadcast(pop.filter(F.col("_n") > cap).select(group))
+        # vs the index of previously kept documents
+        hits = (
+            members.join(degenerate, group, "left_anti")
+            .alias("a")
+            .join(index.alias("b"), a(group) == b(group))
+            .filter(match(a, b))
+            .select(a("id"))
+            .distinct()
+        )
+        stage1 = hold(docs.join(hits, "id", "left_anti"))
+        # within the batch: id-only pairs per shared group, each pair once,
+        # payloads re-attached per side — the rule runs once per pair, not
+        # once per shared group, and payloads never enter the self-join
+        s1 = stage1.select("id", F.explode("groups").alias(group)).join(
+            degenerate, group, "left_anti"
+        )
+        pairs = (
+            s1.alias("a")
+            .join(s1.alias("b"), (a(group) == b(group)) & (a("id") < b("id")))
+            .select(a("id").alias("lo"), b("id").alias("hi"))
+            .distinct()
+        )
+        edges = (
+            pairs.join(stage1.alias("a"), F.col("lo") == a("id"))
+            .join(stage1.alias("b"), F.col("hi") == b("id"))
+            .filter(match(a, b))
+            .select("lo", "hi")
+        )
+        survivors = hold(_sequential_survivors(stage1, edges))
+        out_rows = batch_df.filter(~present).unionByName(
+            batch_df.join(survivors.select(F.col("id").alias(id_col)), id_col)
+        )
+        idx_rows = (
+            survivors.select(F.explode("groups").alias(group), "id", *payload)
+            .join(degenerate, group, "left_anti")
+            .select(*index.columns)
+        )
+        _publish(out_rows, out_dir, batch_id)
+        _publish(idx_rows, index_dir, batch_id)
+    finally:
+        for df in held:
+            df.unpersist()
+
+
 def near_dedup_batch_step(
     spark: SparkSession,
     batch_df: DataFrame,
@@ -234,90 +352,54 @@ def near_dedup_batch_step(
 ) -> None:
     """One micro-batch of the streaming near-dedup (the foreachBatch body;
     callable directly for a file-by-file batch replay — the equality pin)."""
-    # materialize signatures ONCE per batch: the (id, sig, buckets) frame
-    # feeds four joins below, and leaving it as lineage would re-evaluate
-    # the 16-seed hash expression (and re-compile its codegen) per plan —
-    # measured 9x slower on the sf0.1 smoke
     # null/empty-text docs carry no shingle signal: they bypass near-dedup
     # (kept unconditionally, never indexed) — exact streaming dedup is the
     # right tool for them. The pure-Python re-derivation applies the same
     # rule.
-    par = spark.sparkContext.defaultParallelism
-    hastext = F.col(text_col).isNotNull() & (F.length(text_col) > 0)
-    sigs = _sig_frame(
-        batch_df.filter(hastext).repartition(par),
-        text_col, id_col, ngram, num_hashes, bands,
-    ).persist()
-    buckets = sigs.select(
-        "id", "sig", F.explode("buckets").alias("bucket")
+    _keep_against_index(
+        spark, batch_df, batch_id, index_dir, out_dir, id_col,
+        present=F.col(text_col).isNotNull() & (F.length(text_col) > 0),
+        docs_of=lambda rows: _sig_frame(
+            rows, text_col, id_col, ngram, num_hashes, bands
+        ),
+        schema=INDEX_SCHEMA,
+        group="bucket",
+        cap=max_bucket,
+        match=lambda a, b: _sig_agree(a("sig"), b("sig")) >= min_sig_agree,
     )
-    index = _read_index(spark, index_dir, batch_id)
-    # degenerate-bucket guard (see module docstring): combined index+batch
-    # population above the cap -> the bucket is out of candidate
-    # generation for this batch and out of the index append. The guard
-    # frame is one row per OVERFULL bucket — tiny; both exclusions are
-    # broadcast anti-joins.
-    bucket_pop = (
-        buckets.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("_nb"))
-        .join(
-            index.groupBy("bucket").agg(F.count(F.lit(1)).alias("_ni")),
-            "bucket",
-            "full_outer",
+
+
+def _stream_keep_against_index(
+    spark: SparkSession,
+    stream_df: DataFrame,
+    index_dir: str,
+    checkpoint_dir: str,
+    compact_every_n_batches: int | None,
+    schema: str,
+    step,
+):
+    """The foreachBatch wiring both streaming dedups share: ``step(batch_df,
+    batch_id)`` per micro-batch, preceded every ``compact_every_n_batches``
+    batches by :func:`compact_index` under ``schema``. Returns the started
+    query."""
+    n = compact_every_n_batches
+    if n is not None and (isinstance(n, bool) or not isinstance(n, int) or n < 1):
+        raise ValueError(
+            f"compact_every_n_batches must be None or an int >= 1, got {n!r}"
         )
-        .select(
-            "bucket",
-            (F.coalesce("_nb", F.lit(0)) + F.coalesce("_ni", F.lit(0))).alias("_n"),
-        )
+
+    def fb(batch_df, batch_id):
+        bid = int(batch_id)
+        if n is not None and bid > 0 and bid % n == 0:
+            compact_index(spark, index_dir, bid, schema=schema)
+        step(batch_df, bid)
+
+    return (
+        stream_df.writeStream.foreachBatch(fb)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    degenerate = bucket_pop.filter(F.col("_n") > max_bucket).select("bucket")
-    buckets_ok = buckets.join(F.broadcast(degenerate), "bucket", "left_anti")
-    # vs the index of previously kept docs: drop on bucket share + sig agree
-    vs_index = (
-        buckets_ok.join(
-            index.select(
-                F.col("bucket"),
-                F.col("sig").alias("_isig"),
-            ),
-            "bucket",
-        )
-        .filter(_sig_agree(F.col("sig"), F.col("_isig")) >= min_sig_agree)
-        .select("id")
-        .distinct()
-    )
-    stage1 = sigs.join(vs_index, "id", "left_anti").persist()
-    # within the batch: the sequential rule — doc kept iff it matches no
-    # earlier KEPT doc (dropped docs do not shadow; see module docstring)
-    b1 = stage1.select("id", "sig", F.explode("buckets").alias("bucket")).join(
-        F.broadcast(degenerate), "bucket", "left_anti"
-    )
-    edges = (
-        b1.alias("a")
-        .join(
-            b1.alias("b"),
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .filter(_sig_agree(F.col("a.sig"), F.col("b.sig")) >= min_sig_agree)
-        .select(F.col("a.id").alias("lo"), F.col("b.id").alias("hi"))
-        .distinct()
-    )
-    survivors = _sequential_survivors(stage1, edges).persist()
-    try:
-        out_rows = batch_df.filter(~hastext).unionByName(
-            batch_df.join(
-                survivors.select(F.col("id").alias(id_col)), id_col
-            )
-        )
-        idx_rows = survivors.select(
-            F.explode("buckets").alias("bucket"), "id", "sig"
-        ).join(F.broadcast(degenerate), "bucket", "left_anti")
-        _publish(out_rows, out_dir, batch_id)
-        _publish(idx_rows, index_dir, batch_id)
-    finally:
-        survivors.unpersist()
-        stage1.unpersist()
-        sigs.unpersist()
 
 
 def stream_near_dedup(
@@ -329,36 +411,27 @@ def stream_near_dedup(
     compact_every_n_batches: int | None = None,
     **kwargs,
 ):
-    """Wire the per-batch step into a streaming query (availableNow or
-    continuous — foreachBatch either way). Returns the started query.
+    """Wire the per-batch step into a streaming query (foreachBatch,
+    ``availableNow``: the query drains the input available at start and
+    stops; a restart from the same checkpoint resumes where it stopped,
+    and batch ids continue across restarts). Returns the started query.
 
-    ``compact_every_n_batches`` turns on automatic index maintenance for a
-    continuous job: every N-th micro-batch first folds all older
+    ``compact_every_n_batches`` (None or an int >= 1) turns on automatic
+    index maintenance: every N-th micro-batch first folds all older
     ``batch_id=k`` index directories into one (see :func:`compact_index`),
     keeping the per-batch directory listing O(N) for the life of the job.
+    The cadence follows the batch ids, so it continues across restarts.
     Safe inside foreachBatch: when batch ``B`` runs, every batch below
     ``B`` is committed (only ``B`` itself can replay, and its index read
     excludes ids >= its own either way — merged directory included); a
     replayed batch re-runs the compaction as a no-op (<= 1 source dir).
     """
-
-    def fb(batch_df, batch_id):
-        bid = int(batch_id)
-        if (
-            compact_every_n_batches is not None
-            and bid > 0
-            and bid % compact_every_n_batches == 0
-        ):
-            compact_index(spark, index_dir, bid)
-        near_dedup_batch_step(
-            spark, batch_df, bid, index_dir, out_dir, **kwargs
-        )
-
-    return (
-        stream_docs.writeStream.foreachBatch(fb)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _stream_keep_against_index(
+        spark, stream_docs, index_dir, checkpoint_dir,
+        compact_every_n_batches, INDEX_SCHEMA,
+        lambda df, bid: near_dedup_batch_step(
+            spark, df, bid, index_dir, out_dir, **kwargs
+        ),
     )
 
 

@@ -19,12 +19,14 @@ MinHash streaming path):
   (batch order, then ``id_col`` order within a batch): a vector is KEPT iff
   it matches no previously KEPT vector. Dropped vectors do NOT shadow later
   ones, so the kept set is invariant to micro-batch chopping (pinned by the
-  replay tests). Within a micro-batch the sequential rule runs as the same
-  iterative greedy elimination over the matched-pair edge set the text path
-  uses (one shared ``_sequential_survivors``, so the two streaming dedups
-  cannot drift);
-- survivors are appended to the output and their ``(cluster, id, vec)``
-  rows to the index.
+  replay tests). Both streaming dedups run ONE micro-batch step,
+  :func:`rtfproc_spark.streaming.dedup._keep_against_index` (group guard,
+  vs-index join, in-batch pairs, the iterative greedy elimination, the
+  publishes), and one stream wiring, so they cannot drift: this module
+  supplies only the per-vector frame (``ivf_assign`` cluster, ``_norm``)
+  and the pair rule;
+- survivors are appended to the output and their ``(cluster, id, vec,
+  norm)`` rows to the index.
 
 Degenerate clusters (the 100 TB guard): comparing only within a cluster is
 what keeps the work sum(m_c^2) instead of n^2 — but ONLY while clusters
@@ -48,8 +50,8 @@ Exactly-once: output and index publish per micro-batch into ``batch_id=N``
 subdirectories via write-then-atomic-rename; the index read EXCLUDES the
 current batch id, so a replayed batch cannot see its own half-published
 rows and self-match. Index maintenance (directory-listing compaction with
-the crash-recovery sweep) is shared with the text path via
-:func:`rtfproc_spark.streaming.dedup.compact_index`.
+the crash-recovery sweep, :func:`rtfproc_spark.streaming.dedup.
+compact_index`) runs from the shared stream wiring.
 
 Scale shape: cluster assignment is an Arrow-batched matmul against a
 broadcast centroid matrix (scan-local, zero shuffle); the index join moves
@@ -65,11 +67,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rtfproc_spark.streaming.dedup import (
-    _read_index,
-    _sequential_survivors,
-    compact_index,
+    _keep_against_index,
+    _stream_keep_against_index,
 )
-from rtfproc_spark.streaming.sink import _publish
 
 # the norm is STORED with the vector (computed once at keep time via the
 # same `_norm` fold the comparisons use) so the vs-index candidate filter
@@ -109,113 +109,33 @@ def semantic_dedup_batch_step(
     pin, same pattern as ``near_dedup_batch_step``)."""
     from rtfproc_spark.functions.similarity import ivf_assign
 
-    hasvec = F.col(vec_col).isNotNull()
-    # (id, cluster, vec, norm), materialized ONCE: the assignment UDF and
-    # the norm fold feed the size agg, the index join, both self-join
-    # sides, and the index append — leaving them as lineage would re-run
-    # the matmul UDF per consumer (the text path measured 9x on the same
-    # mistake with its hash expressions)
-    par = spark.sparkContext.defaultParallelism
-    vecs = batch_df.filter(hasvec).repartition(par).select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
+    def docs_of(rows: DataFrame) -> DataFrame:
+        # (id, [cluster], vec, norm): one group per vector, its cluster
+        vecs = rows.select(
+            F.col(id_col).alias("id"),
+            F.col(vec_col).cast("array<double>").alias("vec"),
+        )
+        return ivf_assign(vecs, centroids, vec_col="vec", id_col="id").join(
+            vecs, "id"
+        ).select(
+            "id",
+            F.array("cluster").alias("groups"),
+            "vec",
+            _norm(F.col("vec")).alias("norm"),
+        )
+
+    _keep_against_index(
+        spark, batch_df, batch_id, index_dir, out_dir, id_col,
+        present=F.col(vec_col).isNotNull(),
+        docs_of=docs_of,
+        schema=SEM_INDEX_SCHEMA,
+        group="cluster",
+        cap=max_cluster,
+        # round(., 4): the reproducible edge rule the batch path shares
+        match=lambda a, b: F.round(
+            _cos(a("vec"), a("norm"), b("vec"), b("norm")), 4
+        ) >= F.lit(threshold),
     )
-    assigned = (
-        ivf_assign(vecs, centroids, vec_col="vec", id_col="id")
-        .join(vecs, "id")
-        .withColumn("n", _norm(F.col("vec")))
-        .persist()
-    )
-    index = _read_index(spark, index_dir, batch_id, schema=SEM_INDEX_SCHEMA)
-    # degenerate-cluster guard: combined index+batch population above the
-    # cap -> cluster out of candidate generation AND out of the index
-    # append. One row per overfull cluster — broadcast anti-joins.
-    cluster_pop = (
-        assigned.groupBy("cluster")
-        .agg(F.count(F.lit(1)).alias("_nb"))
-        .join(
-            index.groupBy("cluster").agg(F.count(F.lit(1)).alias("_ni")),
-            "cluster",
-            "full_outer",
-        )
-        .select(
-            "cluster",
-            (F.coalesce("_nb", F.lit(0)) + F.coalesce("_ni", F.lit(0))).alias("_n"),
-        )
-    )
-    degenerate = cluster_pop.filter(F.col("_n") > max_cluster).select("cluster")
-    ok = assigned.join(F.broadcast(degenerate), "cluster", "left_anti")
-    # vs the index of previously kept vectors: drop on cluster share +
-    # cosine threshold (round(.,4) — the reproducible edge rule)
-    vs_index = (
-        ok.join(
-            index.select(
-                "cluster",
-                F.col("vec").alias("_ivec"),
-                F.col("norm").alias("_inorm"),
-            ),
-            "cluster",
-        )
-        .filter(
-            F.round(_cos(F.col("vec"), F.col("n"), F.col("_ivec"), F.col("_inorm")), 4)
-            >= F.lit(threshold)
-        )
-        .select("id")
-        .distinct()
-    )
-    stage1 = assigned.join(vs_index, "id", "left_anti").persist()
-    # within the batch: the sequential rule over the matched-pair graph —
-    # id-only pairs first, vectors re-attached per side (the batch
-    # semantic_dedup's join shape: only (cluster, id) rows move through
-    # the self-join)
-    s1 = stage1.join(F.broadcast(degenerate), "cluster", "left_anti").select(
-        "cluster", "id"
-    )
-    pairs = (
-        s1.alias("a")
-        .join(
-            s1.alias("b"),
-            (F.col("a.cluster") == F.col("b.cluster"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("lo"), F.col("b.id").alias("hi"))
-    )
-    side = stage1.select("id", "vec", "n")
-    edges = (
-        pairs.join(
-            side.select(
-                F.col("id").alias("lo"), F.col("vec").alias("v_a"), F.col("n").alias("n_a")
-            ),
-            "lo",
-        )
-        .join(
-            side.select(
-                F.col("id").alias("hi"), F.col("vec").alias("v_b"), F.col("n").alias("n_b")
-            ),
-            "hi",
-        )
-        .filter(
-            F.round(_cos(F.col("v_a"), F.col("n_a"), F.col("v_b"), F.col("n_b")), 4)
-            >= F.lit(threshold)
-        )
-        .select("lo", "hi")
-        .distinct()
-    )
-    survivors = _sequential_survivors(stage1, edges).persist()
-    try:
-        out_rows = batch_df.filter(~hasvec).unionByName(
-            batch_df.join(survivors.select(F.col("id").alias(id_col)), id_col)
-        )
-        idx_rows = (
-            survivors.join(F.broadcast(degenerate), "cluster", "left_anti")
-            .select("cluster", "id", "vec", F.col("n").alias("norm"))
-        )
-        _publish(out_rows, out_dir, batch_id)
-        _publish(idx_rows, index_dir, batch_id)
-    finally:
-        survivors.unpersist()
-        stage1.unpersist()
-        assigned.unpersist()
 
 
 def stream_semantic_dedup(
@@ -228,29 +148,21 @@ def stream_semantic_dedup(
     compact_every_n_batches: int | None = None,
     **kwargs,
 ):
-    """Wire the per-batch step into a streaming query (availableNow or
-    continuous — foreachBatch either way). Returns the started query.
-    ``compact_every_n_batches`` enables the shared index-compaction
-    maintenance (see :func:`rtfproc_spark.streaming.dedup.compact_index`)
-    with this path's index schema."""
-
-    def fb(batch_df, batch_id):
-        bid = int(batch_id)
-        if (
-            compact_every_n_batches is not None
-            and bid > 0
-            and bid % compact_every_n_batches == 0
-        ):
-            compact_index(spark, index_dir, bid, schema=SEM_INDEX_SCHEMA)
-        semantic_dedup_batch_step(
-            spark, batch_df, bid, centroids, index_dir, out_dir, **kwargs
-        )
-
-    return (
-        stream_vecs.writeStream.foreachBatch(fb)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    """Wire the per-batch step into a streaming query — the wiring
+    :func:`rtfproc_spark.streaming.dedup.stream_near_dedup` runs:
+    foreachBatch, ``availableNow`` (drain the available input and stop;
+    batch ids, and with them the compaction cadence, continue across
+    restarts from the same checkpoint). Returns the started query.
+    ``compact_every_n_batches`` (None or an int >= 1) enables the shared
+    index-compaction maintenance (see
+    :func:`rtfproc_spark.streaming.dedup.compact_index`) with this path's
+    index schema."""
+    return _stream_keep_against_index(
+        spark, stream_vecs, index_dir, checkpoint_dir,
+        compact_every_n_batches, SEM_INDEX_SCHEMA,
+        lambda df, bid: semantic_dedup_batch_step(
+            spark, df, bid, centroids, index_dir, out_dir, **kwargs
+        ),
     )
 
 

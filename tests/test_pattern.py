@@ -2588,3 +2588,52 @@ def test_stream_define_literal_containing_and():
     assert out["V"] == "x AND y"
     assert out["P"] == ("a AND b", "c")
     assert localmap == {"P": [("value", ">", 3.0)]}
+
+
+@pytest.mark.parametrize(
+    "expr, want, want_nav",
+    [
+        (
+            "label = 'PREV(' AND value < PREV(value)",
+            "label = 'PREV(' AND value < __nav_prev1_0",
+            {("prev", "value", 1): "__nav_prev1_0"},
+        ),
+        (
+            "x = PREV(CASE WHEN t = ')' THEN 1 ELSE 0 END)",
+            "x = __nav_prev1_0",
+            {("prev", "CASE WHEN t = ')' THEN 1 ELSE 0 END", 1):
+             "__nav_prev1_0"},
+        ),
+        (   # a literal is no cross-variable reference
+            "label = 'U.x' AND value < PREV(value)",
+            "label = 'U.x' AND value < __nav_prev1_0",
+            {("prev", "value", 1): "__nav_prev1_0"},
+        ),
+        (   # whitespace normalization stops at a literal
+            "x = PREV(CASE WHEN t = 'a  b' THEN 1 ELSE 0 END)",
+            "x = __nav_prev1_0",
+            {("prev", "CASE WHEN t = 'a  b' THEN 1 ELSE 0 END", 1):
+             "__nav_prev1_0"},
+        ),
+    ],
+)
+def test_define_nav_scan_skips_quoted_literals(expr, want, want_nav):
+    """No Spark: the batch PREV/NEXT scan skips quoted literals — a
+    literal reading 'PREV(', holding a ')' or reading like ``VAR.col``
+    is neither navigation nor a reference, and keeps its whitespace."""
+    from rtfproc_spark.operators.pattern import _lower_define_nav
+
+    nav = {}
+    assert _lower_define_nav(expr, "D", {"D", "U"}, nav) == want
+    assert nav == want_nav
+
+
+def test_stream_next_probe_skips_quoted_literals():
+    """No Spark: the stream's NEXT probe ignores a literal reading
+    'NEXT(1)' and keeps its targeted message for real navigation."""
+    from rtfproc_spark.operators.pattern import _lower_stream_define
+
+    type_col, out, *_ = _lower_stream_define({"A": "event_type = 'NEXT(1)'"})
+    assert (type_col, out) == ("event_type", {"A": "NEXT(1)"})
+    with pytest.raises(ValueError, match="NEXT navigation is batch-only"):
+        _lower_stream_define({"A": "value < NEXT(value)"})

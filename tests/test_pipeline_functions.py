@@ -310,23 +310,6 @@ def test_connected_components_raises_on_non_convergence(spark):
     assert {r["component"] for r in ok} == {0}
 
 
-def test_persist_scope_releases_only_its_own(spark):
-    """Scoped persistence: releasing one query's scope must not unpersist
-    another scope's cached intermediates (the process-global-registry
-    hazard for concurrent queries)."""
-    from rtfproc_spark.functions.buckets import PersistScope, persist_tracked
-
-    s1, s2 = PersistScope(), PersistScope()
-    a = persist_tracked(spark.range(10), scope=s1)
-    b = persist_tracked(spark.range(20), scope=s2)
-    a.count(), b.count()
-    assert a.storageLevel.useMemory and b.storageLevel.useMemory
-    assert s1.release() == 1
-    assert not a.storageLevel.useMemory  # s1's cache dropped
-    assert b.storageLevel.useMemory  # s2's untouched
-    assert s2.release() == 1
-
-
 def test_hash_split_deterministic_and_covering(spark):
     """hash_split is a pure function of the id: same bucket regardless of
     partitioning, every bucket in [0,100), and the 80/10/10 split labels

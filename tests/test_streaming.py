@@ -2749,6 +2749,7 @@ def test_near_dedup_sequential_shadowing_and_chopping_invariance(spark, tmp_path
 
     from rtfproc_spark.functions.xxh64 import spark_xxhash64
     from rtfproc_spark.streaming.dedup import (
+        INDEX_SCHEMA,
         near_dedup_batch_step,
         near_dedup_sequential_local,
         read_kept,
@@ -2789,10 +2790,11 @@ def test_near_dedup_sequential_shadowing_and_chopping_invariance(spark, tmp_path
 
     assert m(sx, sy) and m(sy, sz) and not m(sx, sz)
 
-    docs = [(1, X), (2, Y), (3, Z)]
+    # null / empty text bypasses near-dedup: kept, never indexed
+    docs = [(1, X), (2, Y), (3, Z), (4, None), (5, "")]
     choppings = [
         [docs],                            # one batch
-        [[docs[0]], [docs[1]], [docs[2]]], # per-doc batches
+        [[d] for d in docs],               # per-doc batches
         [docs[:2], docs[2:]],              # split before Z
         [docs[:1], docs[1:]],              # Y and Z share a batch
     ]
@@ -2809,8 +2811,17 @@ def test_near_dedup_sequential_shadowing_and_chopping_invariance(spark, tmp_path
             r["doc_id"]
             for r in read_kept(spark, str(tmp_path / f"out{ci}")).collect()
         )
-        assert got == [1, 3], (ci, got)
-        assert [i for i, _ in near_dedup_sequential_local(batches)] == [1, 3]
+        assert got == [1, 3, 4, 5], (ci, got)
+        assert sorted(
+            i for i, _ in near_dedup_sequential_local(batches)
+        ) == [1, 3, 4, 5]
+        indexed = {
+            r["id"]
+            for r in spark.read.schema(INDEX_SCHEMA)
+            .parquet(str(tmp_path / f"idx{ci}" / "batch_id=*"))
+            .collect()
+        }
+        assert indexed == {1, 3}, (ci, indexed)
 
 
 def test_near_dedup_degenerate_bucket_cap(spark, tmp_path):
@@ -3027,6 +3038,27 @@ def test_near_dedup_compaction_crash_window_and_autocompact(spark, tmp_path):
         if d.startswith("batch_id=")
     ]
     assert len(dirs) <= 2, dirs
+
+
+def test_near_dedup_and_semantic_dedup_reject_bad_compact_cadence():
+    """No Spark: both stream dedups share one wiring, which rejects a
+    ``compact_every_n_batches`` other than None or an int >= 1 before it
+    touches the stream (0 would otherwise die as ZeroDivisionError inside
+    foreachBatch at batch 1; a negative or fractional value would compact
+    on an odd schedule)."""
+    from rtfproc_spark.streaming.dedup import stream_near_dedup
+    from rtfproc_spark.streaming.semdedup import stream_semantic_dedup
+
+    for bad in (0, -2, 2.5, True, "3"):
+        with pytest.raises(ValueError, match="compact_every_n_batches"):
+            stream_near_dedup(
+                None, None, "idx", "out", "ckpt", compact_every_n_batches=bad
+            )
+        with pytest.raises(ValueError, match="compact_every_n_batches"):
+            stream_semantic_dedup(
+                None, None, None, "idx", "out", "ckpt",
+                compact_every_n_batches=bad,
+            )
 
 
 def test_near_dedup_compaction_midpublish_crash_recovers(spark, tmp_path):
