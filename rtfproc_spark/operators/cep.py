@@ -2054,15 +2054,29 @@ def decode_buffer(blob: bytes | None, m: int) -> tuple[list, list]:
 # amortises Spark's per-group framing and the per-call pandas work over all
 # of the bucket's keys — Flink's key groups. Each bucket row holds its keys'
 # per-key (partials, buffer) blobs and timeouts side by side.
+#
+# 128 buckets is Flink's floor for its number of key groups, and it caps the
+# stateful stage at 128 tasks that do work. Fewer buckets pay the per-group
+# cost fewer times per batch, but would cap the parallelism lower.
+#
+# Changing the count moves keys to other buckets, so a checkpoint written with
+# another count must not be resumed. The count recorded in each bucket row
+# (checked in _advance_bucket) only catches rows that get visited: a bucket
+# that sees no data and no due timeout is never read, and its keys are lost
+# without an error. So any change of the count must ALSO change the grouping
+# key's schema, which Spark checks for the whole state store when the query
+# starts (STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE). The 1 024-bucket builds
+# grouped on a bigint; this one groups on an int.
 
-STATE_BUCKETS = 1024
+STATE_BUCKETS = 128
 BUCKET_COL = "_cep_bucket"
 _NO_TIMEOUT = -1  # GroupState.NO_TIMESTAMP
 
 
 def _bucket_of(key_col: str) -> Column:
-    """The key's state bucket; null keys are filtered out before this."""
-    return F.pmod(F.xxhash64(key_col), F.lit(STATE_BUCKETS))
+    """The key's state bucket, an ``int`` (see the note above
+    ``STATE_BUCKETS``); null keys are filtered out before this."""
+    return F.pmod(F.xxhash64(key_col), F.lit(STATE_BUCKETS)).cast("int")
 
 
 class _KeyState:
@@ -2171,9 +2185,10 @@ def _advance_bucket(key_fn, state: GroupState, keyed: list, timeout_conf: str) -
     The bucket's own timeout is the minimum of its keys'; a bucket with no
     key left is removed. Returns the emitted rows of all keys.
 
-    The bucket row records ``STATE_BUCKETS``: a checkpoint written with
-    another bucket count routes keys elsewhere, and raises here instead of
-    silently missing them."""
+    The bucket row records ``STATE_BUCKETS``: a row written with another
+    bucket count routes keys elsewhere, and raises here instead of
+    silently missing them. Rows never visited are fenced by the grouping
+    key's schema instead (see the note above ``STATE_BUCKETS``)."""
     if state.exists:
         keys, partials, buffers, tmos, n_buckets = state.get
         if n_buckets != STATE_BUCKETS:
@@ -2415,22 +2430,28 @@ def match_sequence_stream(
     transits the buffer — the price of "any event keeps the session
     alive".
 
-    Scale note: keyed state is KEY-BUCKETED. The operator groups by
-    ``_cep_bucket = pmod(xxhash64(key_col), STATE_BUCKETS)`` (1024 hash
-    buckets, Flink's key groups), not by the key, so Spark's per-group
-    framing and the per-call pandas work are paid once per bucket, not
-    once per key: each call sorts the bucket's
+    Scale note: keyed state is KEY-BUCKETED. The operator groups by the
+    ``int`` ``_cep_bucket = pmod(xxhash64(key_col), STATE_BUCKETS)`` (128
+    hash buckets, Flink's key groups), not by the key, so Spark's
+    per-group framing and the per-call pandas work are paid once per
+    bucket, not once per key: each call sorts the bucket's
     rows once with numpy, splits them per key, runs the per-key machine
     for every key with data and for every key whose own timeout fell
     below Spark's threshold (the watermark, or the batch processing time
-    with ``idle_timeout_ms``), and emits one frame. A bucket's state row
-    holds its keys' per-key ``(partials, buffer)`` blobs and timeouts, so
-    ``numRowsTotal`` in the state-operator progress counts buckets, not
-    keys. The row also records the bucket count: a checkpoint written with
-    another count raises a targeted fresh-checkpoint ``ValueError``.
-    Checkpoints of the earlier per-key layout (one ``partials, buffer``
-    row per key) fail Spark's state-schema check on restart and need a
-    fresh checkpoint location too. The state machine itself still
+    with ``idle_timeout_ms``), and emits one frame. The bucket count caps
+    the stateful stage at 128 busy tasks, whatever the shuffle partitions.
+    A bucket's state row holds its keys' per-key ``(partials, buffer)``
+    blobs and timeouts, so ``numRowsTotal`` in the state-operator progress
+    counts buckets, not keys. Rows with a null key, ts or id are dropped
+    before the shuffle. The row also records the bucket count, and a
+    visited row written with another count raises a targeted
+    fresh-checkpoint ``ValueError``. A restart from a checkpoint of the
+    1 024-bucket builds, which grouped on a ``bigint``, fails at query
+    start with Spark's ``STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE``, before
+    any batch runs, so no key is lost silently; restart such queries from
+    a fresh checkpoint location. Checkpoints of the earlier per-key layout
+    (one ``partials, buffer`` row per key) fail Spark's state-schema check
+    on restart too. The state machine itself still
     advances PER EVENT in Python — fine for the per-key event rates a
     watermarked stream implies, but a single key sustaining very high
     rates on a continuous job will bottleneck on that loop; the batch
@@ -3280,8 +3301,15 @@ def match_sequence_stream(
         stream.withWatermark(time_col, watermark)
         # the matcher reads only these columns: do not shuffle the rest
         .select(*dict.fromkeys([key_col, time_col, id_col, type_col, *aux_cols]))
-        # a null key never matches in batch (every step joins on key == key)
-        .where(F.col(key_col).isNotNull())
+        # a null key never matches in batch (every step joins on key == key);
+        # a null ts or id can neither anchor nor advance (_bucket_events), and
+        # a null id would widen the group's int64 id column to float64, which
+        # rounds the other ids above 2**53
+        .where(
+            F.col(key_col).isNotNull()
+            & F.col(time_col).isNotNull()
+            & F.col(id_col).isNotNull()
+        )
         .withColumn(BUCKET_COL, _bucket_of(key_col))
         .groupBy(BUCKET_COL)
         .applyInPandasWithState(

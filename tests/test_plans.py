@@ -5,6 +5,7 @@ projection prunes columns, small dims broadcast, Python stays in one Arrow
 island per extraction pass.
 """
 
+import json
 import re
 
 import pytest
@@ -491,8 +492,10 @@ def test_cep_union_matchers_default_plan(spark):
 def test_stream_cep_groups_by_key_bucket(spark, tmp_path):
     """The stream matcher's stateful operator groups on the hash bucket of
     the key, not on the key: a fallback to one group per user fails here.
-    Null keys are filtered out before the shuffle, as batch never matches
-    them."""
+    The bucket is an ``int``: the 1 024-bucket builds grouped on a bigint,
+    and the key schema change is what stops a restart from one of their
+    checkpoints at query start. Null keys are filtered out before the
+    shuffle, as batch never matches them, and so are null ts and ids."""
     from rtfproc_spark.operators.pattern import match_recognize_stream
 
     stream = spark.readStream.schema(
@@ -510,3 +513,10 @@ def test_stream_cep_groups_by_key_bucket(spark, tmp_path):
     assert "xxhash64(user_id" in p, p
     below_exchange = p[p.index("Exchange hashpartitioning(_cep_bucket"):]
     assert re.search(r"Filter .*isnotnull\(user_id", below_exchange), p
+    assert re.search(r"Filter .*isnotnull\(ts", below_exchange), p
+    assert re.search(r"Filter .*isnotnull\(event_id", below_exchange), p
+    nodes = json.loads(m._jdf.queryExecution().analyzed().toJSON())
+    (fm,) = [n for n in nodes if n["class"].endswith(".FlatMapGroupsInPandasWithState")]
+    assert [(a["name"], a["dataType"]) for [a] in fm["groupingAttributes"]] == [
+        ("_cep_bucket", "integer")
+    ], fm["groupingAttributes"]

@@ -524,7 +524,9 @@ def test_match_sequence_stream_quantifiers_equals_batch(spark, tmp_path):
     exactly the batch operator's rows — including the null ts/id columns of
     skipped optionals and the emitted count — across a real 4-micro-batch
     replay. Null-key rows that would form matches as one key match in
-    neither twin."""
+    neither twin. Ids above 2**53 come back exact even with a null-id row
+    of the same key in the same micro-batch (a null in an int64 Arrow
+    column turns it into float64 in pandas)."""
     import random
     import time as _time
     from datetime import datetime, timedelta
@@ -560,17 +562,33 @@ def test_match_sequence_stream_quantifiers_equals_batch(spark, tmp_path):
         ],
         key=lambda r: (r[3], r[0]),
     )
-    pdf = pd.DataFrame(rows, columns=["event_id", "user_id", "event_type", "ts"])
-    pdf["user_id"] = pdf["user_id"].astype("Int64")
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
+    # user 0: a complete run with ids above 2**53 (as doubles, 2**53 + 1
+    # reads 2**53) and, a second later, a row with a null id
+    big = [
+        (2**53 + 1 + 2 * j, 0, typ, t0 + timedelta(seconds=2700 + j))
+        for j, typ in enumerate(["view", "click", "purchase"])
+    ] + [(None, 0, "noise", t0 + timedelta(seconds=2703))]
+    rows = sorted(rows + big, key=lambda r: (r[3], r[0] or 0))
+    pdf = pd.DataFrame(
+        {
+            "event_id": pd.array([r[0] for r in rows], dtype="Int64"),
+            "user_id": pd.array([r[1] for r in rows], dtype="Int64"),
+            "event_type": [r[2] for r in rows],
+            "ts": pd.Series([r[3] for r in rows]).astype("datetime64[us]"),
+        }
+    )
     src = tmp_path / "src"
     src.mkdir()
     now = _time.time()
     n = len(pdf)
     for f in range(4):
         p = str(src / f"part-{f}.parquet")
-        pdf.iloc[f * n // 4 : (f + 1) * n // 4].to_parquet(p, index=False)
+        part = pdf.iloc[f * n // 4 : (f + 1) * n // 4]
+        part.to_parquet(p, index=False)
         os.utime(p, (now + f, now + f))
+        if part["event_id"].isna().any():
+            # the big ids and the null id arrive in the same micro-batch
+            assert (part["event_id"] > 2**53).sum() == 3
 
     spec = CountBetween(
         pred=F.col("event_type") == "error",
@@ -597,6 +615,7 @@ def test_match_sequence_stream_quantifiers_equals_batch(spark, tmp_path):
         .select(*cols)
         .collect()
     }
+    assert any(r[2] == 2**53 + 1 for r in want_all), "the big-id run must match"
     skipped = sum(1 for r in want_all if r[3] is None)
     assert skipped and len(want_all) > skipped, "need taken AND skipped optionals"
     assert any(r[7] == 1 for r in want_all), "count quantifier must bite"
