@@ -53,7 +53,7 @@ def main(workdir: str) -> None:
     )
     from rtfproc_spark.session import get_spark
 
-    spark = get_spark("cep-patterns", master="local[4]", shuffle_partitions=8)
+    spark = get_spark("cep-patterns", master="local[4]", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
 
     t0 = pd.Timestamp("2024-01-01 09:00:00")

@@ -2135,10 +2135,8 @@ def _bucket_events(
     """One bucket's rows split per key: ``[(key, events)]`` with events
     ``(ts_ns, id, type)`` — plus the ``aux_cols`` values as a list of
     doubles (NULL -> NaN) when there are any — in (ts, id) order. One
-    numpy sort for the whole bucket; rows with a null ts or id are dropped
-    (null comparisons are false, so they can neither anchor nor advance in
-    the batch algebra). Keys are non-null: the stream drops null keys
-    before the shuffle."""
+    numpy sort for the whole bucket. Keys, ts and ids are non-null: the
+    stream drops rows with a null in any of them before the shuffle."""
     import numpy as np
     import pandas as pd
 
@@ -2148,18 +2146,12 @@ def _bucket_events(
     pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
     ts = pdf[time_col].to_numpy().astype("datetime64[ns]", copy=False).view(np.int64)
     ids = pdf[id_col].to_numpy()
-    ok = ts != _I64_NONE  # NaT
-    if ids.dtype.kind not in "iu":  # a null id widens the column
-        ok &= ~pd.isna(ids)
     keys = pdf[key_col].to_numpy()
     if keys.dtype.kind in "iu":
         uniques, codes = np.unique(keys, return_inverse=True)
     else:
         codes, uniques = pd.factorize(keys)
-    sel = np.flatnonzero(ok)
-    if not len(sel):
-        return []
-    order = sel[np.lexsort((ids[sel], ts[sel], codes[sel]))]
+    order = np.lexsort((ids, ts, codes))
     codes = codes[order]
     cols = [
         ts[order].tolist(),
@@ -3302,9 +3294,10 @@ def match_sequence_stream(
         # the matcher reads only these columns: do not shuffle the rest
         .select(*dict.fromkeys([key_col, time_col, id_col, type_col, *aux_cols]))
         # a null key never matches in batch (every step joins on key == key);
-        # a null ts or id can neither anchor nor advance (_bucket_events), and
-        # a null id would widen the group's int64 id column to float64, which
-        # rounds the other ids above 2**53
+        # a null ts or id can neither anchor nor advance (null comparisons
+        # are false in the batch algebra), and a null id would widen the
+        # group's int64 id column to float64, which rounds the other ids
+        # above 2**53; _bucket_events relies on this filter
         .where(
             F.col(key_col).isNotNull()
             & F.col(time_col).isNotNull()

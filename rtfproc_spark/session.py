@@ -25,9 +25,11 @@ def get_spark(
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        # one-to-two shuffle tasks per core locally; on a real cluster this
-        # is overridden to ~2-3x total executor cores (AQE coalesces down).
-        shuffle_partitions = max(cpus, 8)
+        # one shuffle task per core locally, so a stateful stage runs one
+        # wave of tasks per micro-batch; on a real cluster this is overridden
+        # to ~2-3x total executor cores (AQE coalesces down). A streaming
+        # query keeps the count its checkpoint was started with.
+        shuffle_partitions = cpus
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)

@@ -5,7 +5,9 @@
   generalization of the reference's txt->raw lineage map (rtfproc.c:979).
 - ``ProgressListener``: a StreamingQueryListener recording per-batch input
   rows, processed rows/sec, and watermark — including the count of late rows
-  dropped by the watermark (B8), surfaced via stateOperators metrics.
+  dropped by the watermark (B8), surfaced via stateOperators metrics — plus
+  the batch's ``durationMs`` breakdown and, per state operator, its state
+  partitions, state rows and update/removal/commit times.
 """
 
 from __future__ import annotations
@@ -59,6 +61,19 @@ class ProgressListener(StreamingQueryListener):
             "state_rows_dropped_by_watermark": sum(
                 (op.numRowsDroppedByWatermark or 0) for op in (p.stateOperators or [])
             ),
+            # addBatch, triggerExecution, queryPlanning, walCommit, ...
+            "duration_ms": dict(p.durationMs or {}),
+            "state_operators": [
+                {
+                    "operator_name": op.operatorName,
+                    "num_shuffle_partitions": op.numShufflePartitions,
+                    "num_rows_total": op.numRowsTotal,
+                    "all_updates_time_ms": op.allUpdatesTimeMs,
+                    "all_removals_time_ms": op.allRemovalsTimeMs,
+                    "commit_time_ms": op.commitTimeMs,
+                }
+                for op in (p.stateOperators or [])
+            ],
         }
         self.progress.append(row)
         if self.jsonl_path:

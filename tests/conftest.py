@@ -19,6 +19,6 @@ def pytest_collection_modifyitems(items):
 def spark():
     from rtfproc_spark.session import get_spark
 
-    s = get_spark("rtfproc-tests", master="local[4]", shuffle_partitions=8)
+    s = get_spark("rtfproc-tests", master="local[4]", shuffle_partitions=4)
     yield s
     s.stop()

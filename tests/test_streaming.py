@@ -198,6 +198,23 @@ def test_windowed_aggregation_with_watermark_and_late_drop(spark, tmp_path):
                 break
             time.sleep(0.5)
         assert dropped >= 1
+        # each row also carries the batch's duration breakdown and, per
+        # state operator, its partitions, state rows and state times
+        parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        op_fields = {
+            "operator_name", "num_shuffle_partitions", "num_rows_total",
+            "all_updates_time_ms", "all_removals_time_ms", "commit_time_ms",
+        }
+        for p in listener.progress:
+            assert {"addBatch", "triggerExecution"} <= set(p["duration_ms"])
+            assert p["state_operators"]
+            for op in p["state_operators"]:
+                assert set(op) == op_fields
+                assert op["num_shuffle_partitions"] == parts
+                assert min(op["num_rows_total"], op["all_updates_time_ms"],
+                           op["all_removals_time_ms"], op["commit_time_ms"]) >= 0
+        assert any(op["num_rows_total"] > 0
+                   for p in listener.progress for op in p["state_operators"])
     finally:
         spark.streams.removeListener(listener)
 
@@ -1389,6 +1406,105 @@ def test_match_sequence_stream_buffered_resume(spark, tmp_path):
     assert [(r["user_id"], r["id_1"], r["id_2"], r["id_3"]) for r in rows] == [
         (7, 1, 2, 3)
     ]
+
+
+def test_match_sequence_stream_restart_keeps_partition_count(spark, tmp_path):
+    """A checkpoint keeps the state partition count it was started with:
+    Spark restores ``spark.sql.shuffle.partitions`` from the offset log, so
+    a buffered query started at 8 partitions and restarted under a session
+    set to 4 still runs 8 state partitions, and its output equals batch
+    ``match_sequence`` with no row emitted twice."""
+    import random
+    import time as _time
+    from datetime import datetime, timedelta
+
+    import pandas as pd
+
+    from rtfproc_spark.operators.cep import match_sequence, match_sequence_stream
+
+    rng = random.Random(29)
+    t0 = datetime(2024, 1, 1)
+    pdf = pd.DataFrame(
+        sorted(
+            (
+                (i, rng.randrange(6), rng.choice("ABCx"),
+                 t0 + timedelta(seconds=rng.randrange(5400)))
+                for i in range(300)
+            ),
+            key=lambda r: (r[3], r[0]),
+        ),
+        columns=["event_id", "user_id", "event_type", "ts"],
+    )
+    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
+    src = tmp_path / "src"
+    src.mkdir()
+    now = _time.time()
+
+    def put(idx, chunk):
+        p = str(src / f"part-{idx}.parquet")
+        chunk.to_parquet(p, index=False)
+        os.utime(p, (now + idx, now + idx))
+
+    n = len(pdf)
+    put(0, pdf.iloc[: n // 3])
+    put(1, pdf.iloc[n // 3 : 2 * n // 3])
+
+    def run(parts):
+        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+        stream = (
+            spark.readStream.schema(
+                "event_id long, user_id long, event_type string, ts timestamp"
+            )
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+        )
+        out = match_sequence_stream(
+            stream, ["A", "B", "C"], key_col="user_id",
+            within="15 minutes", watermark="20 minutes", ordered=False,
+        )
+        q = (
+            out.writeStream.format("parquet")
+            .option("path", str(tmp_path / "out"))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return {
+            op.numShufflePartitions
+            for p in q.recentProgress for op in p.stateOperators
+        }
+
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        assert run(8) == {8}
+        # the rest of the events, and a far-future event that drains the
+        # buffer, arrive while the query is stopped
+        noise = pd.DataFrame(
+            [(9_999, 99, "x", pdf["ts"].max() + pd.Timedelta("2 hours"))],
+            columns=pdf.columns,
+        ).astype(pdf.dtypes)
+        put(2, pd.concat([pdf.iloc[2 * n // 3 :], noise], ignore_index=True))
+        assert run(4) == {8}
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+
+    cols = ["user_id", "ts_1", "id_1", "ts_2", "id_2", "ts_3", "id_3"]
+    got = [
+        tuple(r)
+        for r in spark.read.parquet(str(tmp_path / "out")).select(*cols).collect()
+    ]
+    steps = [F.col("event_type") == s for s in "ABC"]
+    want = {
+        tuple(r)
+        for r in match_sequence(
+            spark.createDataFrame(pdf), steps, ["user_id"], within="15 minutes"
+        ).select(*cols).collect()
+    }
+    assert want, "test corpus must produce completed matches"
+    assert len(got) == len(set(got))
+    assert set(got) == want
 
 
 def test_match_sequence_stream_out_of_order_poison_and_optional(spark, tmp_path):
